@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.functions.{Analyzer, Codec, DenseId}
 import graft.index.IndexBuilder
 import graft.index.IndexBuilder.BuildConfig
-import graft.query.Search
+import graft.query.{Search, Searcher}
 import graft.sources.HtmlText
 
 /** Driver contract: one `queries` entry per implemented operator from
@@ -881,9 +881,9 @@ object SparkEntry {
     // offline-eval / RAG-training shape; exact per-query top-k
     "q_bm25_batch" -> { (s, dir) =>
       import s.implicits._
-      Search.batchTopK(s, indexFor(s, dir), Seq(
-        (1L, QueryOr, "or"), (2L, QueryAnd, "and"),
-        (3L, Seq("window", "batch"), "or")), 10)
+      new Searcher(s, indexFor(s, dir)).topKBatch(Seq(
+        Searcher.BatchQuery(1L, QueryOr, "or"), Searcher.BatchQuery(2L, QueryAnd, "and"),
+        Searcher.BatchQuery(3L, Seq("window", "batch"), "or")), 10)
         .select($"qid", $"doc_id", round($"score" * 10000).cast("long").as("score_e4"))
     },
     // bool.should minimum_should_match: candidates must match ≥2 of the 3

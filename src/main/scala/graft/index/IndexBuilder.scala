@@ -42,6 +42,15 @@ object IndexBuilder {
   val K1 = 1.2
   val B = 0.75
 
+  /** Parquet codec of the postings table. The block payloads
+    * (deltas/tfs/dls) are already entropy-coded by our codec, so
+    * parquet's snappy layer on top buys ~nothing and costs CPU;
+    * term/metadata columns still get parquet dictionary + RLE encoding,
+    * which `uncompressed` does not disable. [[SegmentMerge]] writes with
+    * the same codec, so merged postings stay byte-identical to built ones.
+    */
+  val PostingsCodec = "uncompressed"
+
   /** On-disk layout version. Bump whenever the index format changes
     * (columns, codec, sidecars); readers reject stale caches instead of
     * crashing on missing columns. v3 = v2 + slice-aligned attribute
@@ -404,13 +413,9 @@ object IndexBuilder {
               .as[(String, Int, Long, Int, Int, Array[Byte])]
               .mapPartitions(it => metered(blockify(it, g, blockSize, avgDl)))
         // `grp` comes back as the directory partition column on read.
-        // The block payloads (deltas/tfs/dls) are already entropy-coded by
-        // our codec — parquet's snappy layer on top buys ~nothing for them
-        // and costs CPU; term/metadata columns still get parquet dictionary
-        // + RLE encoding, which compression=uncompressed does not disable.
         timed(s"postings-grp-$g")(blocks.drop("grp")
           .write.mode(SaveMode.Overwrite)
-          .option("compression", sys.env.getOrElse("GRAFT_POSTINGS_CODEC", "uncompressed"))
+          .option("compression", PostingsCodec)
           .parquet(s"$indexDir/postings/grp=$g"))
 
         val metricRows = scala.jdk.CollectionConverters

@@ -228,7 +228,7 @@ object SegmentMerge {
       .reduce(_ unionByName _)
       .write.mode(SaveMode.Overwrite)
       .partitionBy("grp")
-      .option("compression", sys.env.getOrElse("GRAFT_POSTINGS_CODEC", "uncompressed"))
+      .option("compression", IndexBuilder.PostingsCodec)
       .parquet(s"$outDir/postings")
 
     // term dictionary: Σ per-segment (df, tf) per term

@@ -2,8 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.index.{AttrPred, AttrSidecar, IndexBuilder}
-import graft.query.BlockMaxWand.{BlockRef, PostingIter}
+import graft.index.{AttrPred, IndexBuilder}
 
 /** Aggregations over a query's FULL match set — the Elasticsearch
   * aggregation phase (the reference's users read event logs through
@@ -380,50 +379,24 @@ object Facets {
     if (terms.isEmpty || terms.size < minShouldMatch)
       return spark.emptyDataset[(String, Long)].toDF("bucket", "n_docs")
 
-    val bCtx = spark.sparkContext.broadcast(
-      (terms.toArray, exTerms.toArray,
-        buckets.map { case (n, ts, m) => (n, ts.distinct.toArray, m == "and") }.toArray))
-    val bTombs = spark.sparkContext.broadcast(graft.index.Tombstones.handle(indexDir))
+    val qTerms = terms.toArray
+    val bkts = buckets.map { case (n, ts, m) => (n, ts.distinct.toArray, m == "and") }.toArray
     val msm = minShouldMatch
-    val pred = attrFilter
-    val segDir = indexDir
     val emitPairs = pairs
     val allTerms = (terms ++ exTerms ++ buckets.flatMap(_._2)).distinct
 
-    IndexBuilder.readPostings(spark, indexDir)
-      .where($"term".isin(allTerms: _*))
-      .select($"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-      .groupByKey(_._1)
-      .flatMapGroups { (slice, rows) =>
-        val (qTerms, exT, bkts) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._2)
-        def iterOf(t: String): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._4, r._3))
-              .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, 0.0))
-            new PostingIter(0, 0.0, refs, 1.0)
-          }
-        val iters = qTerms.iterator.flatMap(iterOf).toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(segDir, slice, pred)
-          val predCursor = filter
-          val exIters = exT.iterator.flatMap(iterOf).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          val tomb = bTombs.value
-          if (tomb != null) filter = tomb.compose(slice, filter)
+    PostingSource(spark, indexDir).walk(allTerms, attrFilter, scored = false) { s =>
+      s.matchingIds(qTerms, isAnd, msm, exTerms) match {
+        case None => Iterator.empty
+        case Some(ids) =>
           // bucket -> membership cursors: OR = one set over present terms
           // (empty -> unmatchable); AND = one per term, all must contain
           val sets: Array[Array[DocSet]] = bkts.map { case (_, bts, bAnd) =>
             if (bAnd) {
-              val per = bts.flatMap(t => iterOf(t).map(it => new PostingSet(Array(it)): DocSet))
+              val per = bts.flatMap(t => s.iter(t).map(it => new PostingSet(Array(it)): DocSet))
               if (per.length < bts.length) null else per // a term absent from the slice
             } else {
-              val present = bts.flatMap(iterOf)
+              val present = bts.flatMap(t => s.iter(t))
               if (present.isEmpty) null else Array(new PostingSet(present): DocSet)
             }
           }
@@ -431,51 +404,44 @@ object Facets {
           val counts = new Array[Long](nB)
           val pairCounts = if (emitPairs) new Array[Long](nB * nB) else null
           val okArr = new Array[Boolean](nB)
-          try {
-            BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter).foreach { id =>
-              var b = 0
-              while (b < nB) {
-                val ss = sets(b)
-                var ok = ss != null
-                var i = 0
-                while (ok && i < ss.length) { ok = ss(i).matches(id); i += 1 }
-                okArr(b) = ok
-                if (ok) counts(b) += 1L
-                b += 1
-              }
-              if (emitPairs) {
-                var a = 0
-                while (a < nB) {
-                  if (okArr(a)) {
-                    var c = a + 1
-                    while (c < nB) {
-                      if (okArr(c)) pairCounts(a * nB + c) += 1L
-                      c += 1
-                    }
-                  }
-                  a += 1
-                }
-              }
+          ids.foreach { id =>
+            var b = 0
+            while (b < nB) {
+              val ss = sets(b)
+              var ok = ss != null
+              var i = 0
+              while (ok && i < ss.length) { ok = ss(i).matches(id); i += 1 }
+              okArr(b) = ok
+              if (ok) counts(b) += 1L
+              b += 1
             }
-            val singles = bkts.indices.iterator
-              .filter(counts(_) > 0L)
-              .map(i => (bkts(i)._1, counts(i)))
-            val inter =
-              if (!emitPairs) Iterator.empty
-              else for {
-                a <- bkts.indices.iterator
-                c <- (a + 1 until nB).iterator
-                if pairCounts(a * nB + c) > 0L
-              } yield (s"${bkts(a)._1}&${bkts(c)._1}", pairCounts(a * nB + c))
-            (singles ++ inter).toArray.iterator
-          } finally {
-            predCursor match {
-              case c: AutoCloseable => c.close()
-              case _ =>
+            if (emitPairs) {
+              var a = 0
+              while (a < nB) {
+                if (okArr(a)) {
+                  var c = a + 1
+                  while (c < nB) {
+                    if (okArr(c)) pairCounts(a * nB + c) += 1L
+                    c += 1
+                  }
+                }
+                a += 1
+              }
             }
           }
-        }
+          val singles = bkts.indices.iterator
+            .filter(counts(_) > 0L)
+            .map(i => (bkts(i)._1, counts(i)))
+          val inter =
+            if (!emitPairs) Iterator.empty
+            else for {
+              a <- bkts.indices.iterator
+              c <- (a + 1 until nB).iterator
+              if pairCounts(a * nB + c) > 0L
+            } yield (s"${bkts(a)._1}&${bkts(c)._1}", pairCounts(a * nB + c))
+          (singles ++ inter).toArray.iterator
       }
+    }
       .toDF("bucket", "n_docs")
       .groupBy($"bucket")
       .agg(sum($"n_docs").as("n_docs"))
@@ -605,49 +571,12 @@ object Facets {
     val terms = queryTerms.distinct
     val isAnd = mode == "and"
     if (terms.isEmpty || terms.size < minShouldMatch) return 0L
+    val qTerms = terms.toArray
     val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, exTerms.toArray))
-    val idxDir = indexDir
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val pred = attrFilter
     val msm = minShouldMatch
-    val counts = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(terms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-      .groupByKey(_._1)
-      .mapGroups { (slice, rows) =>
-        val (qTerms, exT) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._2)
-        def iterOf(t: String): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._4, r._3))
-              .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, 0.0))
-            new PostingIter(0, 0.0, refs, 1.0)
-          }
-        val iters = qTerms.iterator.flatMap(iterOf).toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) 0L
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(idxDir, slice, pred)
-          val cursor = filter
-          val exIters = exT.iterator.flatMap(iterOf).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          try {
-            var n = 0L
-            BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter).foreach(_ => n += 1)
-            n
-          } finally cursor match {
-            case c: AutoCloseable => c.close()
-            case _ =>
-          }
-        }
-      }
+    val counts = PostingSource(spark, indexDir).walk(terms ++ exTerms, attrFilter, scored = false) { s =>
+      s.matchingIds(qTerms, isAnd, msm, exTerms).map(ids => ids.size.toLong).iterator
+    }
     val row = counts.agg(sum("value")).head()
     if (row.isNullAt(0)) 0L else row.getLong(0) // no matched blocks → 0
   }
@@ -672,51 +601,13 @@ object Facets {
     val isAnd = mode == "and"
     if (terms.isEmpty || terms.size < minShouldMatch)
       return spark.emptyDataset[Long].toDF("doc_id")
+    val qTerms = terms.toArray
     val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, exTerms.toArray))
-    val idxDir = indexDir
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val pred = attrFilter
     val msm = minShouldMatch
-    IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(terms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-      .groupByKey(_._1)
-      .flatMapGroups { (slice, rows) =>
-        val (qTerms, exT) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._2)
-        def iterOf(t: String): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._4, r._3))
-              .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, 0.0))
-            new PostingIter(0, 0.0, refs, 1.0)
-          }
-        val iters = qTerms.iterator.flatMap(iterOf).toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(idxDir, slice, pred)
-          val predCursor = filter
-          val exIters = exT.iterator.flatMap(iterOf).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          // the id stream is LAZY (that is the point — no per-slice
-          // materialization), so the sidecar cursor cannot close in a
-          // finally here; hand it to the task lifecycle instead
-          predCursor match {
-            case c: AutoCloseable =>
-              val tc = org.apache.spark.TaskContext.get()
-              if (tc != null) tc.addTaskCompletionListener[Unit](_ => c.close())
-            case _ =>
-          }
-          BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter)
-        }
-      }
+    // the id stream is LAZY (no per-slice materialization)
+    PostingSource(spark, indexDir).walk(terms ++ exTerms, attrFilter, scored = false) { s =>
+      s.matchingIds(qTerms, isAnd, msm, exTerms).getOrElse(Iterator.empty)
+    }
       .toDF("doc_id")
   }
 
@@ -1359,60 +1250,23 @@ object Facets {
     if (terms.isEmpty || terms.size < minShouldMatch)
       return Seq((0L, true)).toDF("n_distinct", "is_exact")
 
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, exTerms.toArray))
-    val idxDir = indexDir
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val pred = attrFilter
+    val qTerms = terms.toArray
     val msm = minShouldMatch
     val kwF = kwField
     val prec = precision
     val spl = sparseLimit
 
-    val partials = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(terms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-      .groupByKey(_._1)
-      .flatMapGroups { (slice, rows) =>
-        val (qTerms, exT) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._2)
-        def iterOf(t: String): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._4, r._3))
-              .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, 0.0))
-            new PostingIter(0, 0.0, refs, 1.0)
-          }
-        val iters = qTerms.iterator.flatMap(iterOf).toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(idxDir, slice, pred)
-          val cursor = filter
-          val exIters = exT.iterator.flatMap(iterOf).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          val reader = AttrSidecar.openReader(idxDir, slice)
-          val kwIdx = reader.kwIndex(kwF)
-          try {
-            val sketch = new graft.functions.Hll(prec, spl)
-            BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter).foreach { id =>
-              if (reader.seek(id))
-                sketch.add(graft.functions.Hll.hashString(reader.kwValue(kwIdx)))
-            }
-            Iterator.single(sketch.serialize())
-          } finally {
-            reader.close()
-            cursor match {
-              case c: AutoCloseable => c.close()
-              case _ =>
-            }
-          }
+    val partials = PostingSource(spark, indexDir).walk(terms ++ exTerms, attrFilter, scored = false) { s =>
+      s.matchingIds(qTerms, isAnd, msm, exTerms).iterator.map { ids =>
+        val reader = s.reader()
+        val kwIdx = reader.kwIndex(kwF)
+        val sketch = new graft.functions.Hll(prec, spl)
+        ids.foreach { id =>
+          if (reader.seek(id)) sketch.add(graft.functions.Hll.hashString(reader.kwValue(kwIdx)))
         }
+        sketch.serialize()
       }
+    }
       .collect() // nSlices sketches, each size-bounded — the coordinator reduce
 
     val merged = new graft.functions.Hll(prec, spl)
@@ -1457,83 +1311,37 @@ object Facets {
       .toDF(kwField, "n_docs", "rank", "doc_id", "score")
     if (terms.isEmpty || terms.size < minShouldMatch) return emptyOut
 
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val dfs: Map[String, Long] = IndexBuilder
-      .readTerms(spark, indexDir)
-      .where($"term".isin(terms: _*))
-      .collect().map(t => t.term -> t.doc_freq).toMap
+    val src = PostingSource(spark, indexDir)
+    val dfs = src.dfOf(terms)
     if (isAnd && terms.exists(t => !dfs.contains(t))) return emptyOut
     val present = terms.filter(dfs.contains)
     if (present.isEmpty || present.size < minShouldMatch) return emptyOut
-    val idfs = terms.map(t => NaiveBm25.idf(n, dfs.getOrElse(t, 0L))).toArray
-
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, idfs, exTerms.toArray))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val idxDir = indexDir
-    val pred = attrFilter
+    val qTerms = terms.toArray
+    val idfs = terms.map(t => src.idf(dfs.getOrElse(t, 0L))).toArray
     val msm = minShouldMatch
     val fld = kwField
     val kHits = hitsPerBucket
     val vCap = valueCap
 
-    val blocks = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(terms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
     // per (slice, value): (value, countPartial, hits[(negScore, docId)])
     // negated score so a plain ascending array sort ranks (score desc,
     // docId asc) — sign flip is exact on doubles
-    val partials = blocks
-      .groupByKey(_._1)
-      .flatMapGroups { (slice, rows) =>
-        val (qTerms, qIdfs, exT) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._2)
-        def itersOf(t: String, ti: Int, idf: Double): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._4, r._3))
-              .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11))
-            new PostingIter(ti, idf, refs, avgDl)
-          }
-        val iters = qTerms.iterator.zipWithIndex
-          .flatMap { case (t, ti) => itersOf(t, ti, qIdfs(ti)) }.toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(idxDir, slice, pred)
-          val predCursor = filter
-          val exIters = exT.iterator.flatMap(t => itersOf(t, 0, 0.0)).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          val reader = AttrSidecar.openReader(idxDir, slice)
+    val partials = src.walk(present ++ exTerms, attrFilter) { s =>
+      s.scoredMatches(qTerms, idfs, isAnd, msm, exTerms) match {
+        case None => Iterator.empty
+        case Some(matches) =>
+          val reader = s.reader()
           val kwIdx = reader.kwIndex(fld)
-          var closed = false
-          def closeAll(): Unit = if (!closed) {
-            closed = true
-            reader.close()
-            predCursor match {
-              case c: AutoCloseable => c.close()
-              case _ =>
-            }
-          }
-          val tc = org.apache.spark.TaskContext.get()
-          if (tc != null) tc.addTaskCompletionListener[Unit](_ => closeAll())
           // value → (count, bounded best list) — kHits is small, an
           // insertion-sorted ArrayBuffer beats a heap at these sizes
           val acc = scala.collection.mutable.HashMap
             .empty[String, (Array[Long], scala.collection.mutable.ArrayBuffer[(Double, Long)])]
-          val overflow = BlockMaxWand.scoredMatches(iters, isAnd, msm, filter)
-            .flatMap { case (id, s) =>
+          val overflow = matches
+            .flatMap { case (id, sc) =>
               if (!reader.seek(id)) Nil
               else {
                 val v = reader.kwValue(kwIdx)
-                val ns = -s
+                val ns = -sc
                 acc.get(v) match {
                   case Some((cnt, buf)) =>
                     cnt(0) += 1
@@ -1553,19 +1361,11 @@ object Facets {
                 }
               }
             }
-          overflow ++ new scala.collection.AbstractIterator[(String, Long, Array[(Double, Long)])] {
-            private var it: Iterator[(String, Long, Array[(Double, Long)])] = null
-            private def u = {
-              if (it == null)
-                it = acc.iterator.map { case (v, (cnt, buf)) => (v, cnt(0), buf.toArray) }
-              it
-            }
-            def hasNext: Boolean = u.hasNext
-            def next(): (String, Long, Array[(Double, Long)]) = u.next()
-          }
-        }
+          // the map drains only AFTER the match stream exhausts (++ is lazy)
+          overflow ++ Iterator.single(()).flatMap(_ =>
+            acc.iterator.map { case (v, (cnt, buf)) => (v, cnt(0), buf.toArray) })
       }
-      .toDF("v", "cnt", "hits")
+    }.toDF("v", "cnt", "hits")
 
     val buckets = partials
       .groupBy($"v")
@@ -1723,12 +1523,8 @@ object Facets {
         .toDF("n", "sm", "mn", "mx", "s2", "x1")
     if (terms.isEmpty || terms.size < minShouldMatch) return emptyOut
 
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, exTerms.toArray))
-    val bDirs = spark.sparkContext.broadcast(segmentDirs.toArray)
-    val bTombs = spark.sparkContext.broadcast(
-      segmentDirs.map(graft.index.Tombstones.handle).toArray)
+    val qTerms = terms.toArray
     val msm = minShouldMatch
-    val pred = attrFilter
     val numF = numField
     val asHist = histogram
     val lgS = logS
@@ -1736,49 +1532,17 @@ object Facets {
     val wF = weightField
     val asMatrix = matrix
 
-    val blocks = segmentDirs.zipWithIndex
-      .map { case (d, i) =>
-        IndexBuilder.readPostings(spark, d)
-          .where($"term".isin(terms ++ exTerms: _*))
-          .select(
-            lit(i).as("seg"), $"slice", $"term", $"block_id", $"doc_id_min",
-            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss"
-          )
-      }
-      .reduce(_ unionByName _)
-      .as[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-
-    val partials = blocks
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key, rows) =>
-        val (seg, slice) = key
-        val segDir = bDirs.value(seg)
-        val (qTerms, exT) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._3)
-        def iterOf(t: String): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._5, r._4))
-              .map(r => BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11, 0.0))
-            new PostingIter(0, 0.0, refs, 1.0)
-          }
-        val iters = qTerms.iterator.flatMap(iterOf).toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(segDir, slice, pred)
-          val predCursor = filter
-          val exIters = exT.iterator.flatMap(iterOf).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          val tomb = bTombs.value(seg)
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          val reader = AttrSidecar.openReader(segDir, slice)
-          val numIdx = reader.numIndex(numF) // loud on undeclared
-          val wIdx = if (wF != null) reader.numIndex(wF) else -1
-          try {
+    val partials = new PostingSource(spark, segmentDirs)
+      .walk(terms ++ exTerms, attrFilter, scored = false) { s =>
+        s.matchingIds(qTerms, isAnd, msm, exTerms) match {
+          case None => Iterator.empty
+          case Some(ids) =>
+            val reader = s.reader()
+            val numIdx = reader.numIndex(numF) // loud on undeclared
+            val wIdx = if (wF != null) reader.numIndex(wF) else -1
             if (asHist) {
               val counts = scala.collection.mutable.HashMap.empty[Long, Long]
-              BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter).foreach { id =>
+              ids.foreach { id =>
                 if (reader.seek(id)) {
                   val raw = reader.numValue(numIdx)
                   val v = if (lgS >= 0) graft.functions.LogBuckets.bucketOf(raw, lgS) else raw
@@ -1790,7 +1554,7 @@ object Facets {
               var n = 0L; var sm = 0L; var s2 = 0L; var x1 = 0L
               var mn = if (asMatrix) 0L else Long.MaxValue
               var mx = if (asMatrix) 0L else Long.MinValue
-              BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter).foreach { id =>
+              ids.foreach { id =>
                 if (reader.seek(id)) {
                   val v = reader.numValue(numIdx)
                   n += 1
@@ -1824,13 +1588,6 @@ object Facets {
               }
               if (n == 0) Iterator.empty else Iterator.single((n, sm, mn, mx, s2, x1))
             }
-          } finally {
-            reader.close()
-            predCursor match {
-              case c: AutoCloseable => c.close()
-              case _ =>
-            }
-          }
         }
       }
     if (asHist) partials.toDF("v", "n", "_a", "_b", "_c", "_d").select($"v", $"n")
@@ -1902,81 +1659,42 @@ object Facets {
     val isAnd = mode == "and"
     if (terms.isEmpty || terms.size < minShouldMatch)
       return spark.emptyDataset[(String, Long)].toDF("key", "n")
-    require(fields.map(f => IndexBuilder.readMeta(f.indexDir).nSlices).distinct.size == 1,
-      "field indexes must share the slice layout")
-
-    val bTerms = spark.sparkContext.broadcast(terms.toArray)
-    val attrDir = fields.head.indexDir
-    val tomb = graft.index.Tombstones.handle(attrDir)
-    val pred = attrFilter
+    val qTerms = terms.toArray
     val msm = minShouldMatch
     val pat = keyPattern
     val kwF = kwField
+    val nF = fields.size
 
-    val blocks = fields.zipWithIndex
-      .map { case (f, fi) =>
-        IndexBuilder.readPostings(spark, f.indexDir)
-          .where($"term".isin(terms: _*))
-          .select(
-            lit(fi).as("fld"), $"slice", $"term", $"block_id", $"doc_id_min",
-            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss"
-          )
-      }
-      .reduce(_ unionByName _)
-      .as[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-
-    blocks
-      .groupByKey(_._2)
-      .flatMapGroups { (slice, rows) =>
-        val qTerms = bTerms.value
-        val byField = rows.toArray.groupBy(_._1)
-        val perField: Seq[Array[Long]] = byField.valuesIterator.map { rs =>
-          val byTerm = rs.groupBy(_._3)
-          def iterOf(t: String): Option[PostingIter] =
-            byTerm.get(t).map { trs =>
-              val refs = trs.sortBy(r => (r._5, r._4))
-                .map(r => BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11, 0.0))
-              new PostingIter(0, 0.0, refs, 1.0)
-            }
-          val iters = qTerms.iterator.flatMap(iterOf).toArray
-          if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Array.emptyLongArray
-          else {
-            // fresh monotone cursors per field pass (each walks its own
-            // ascending stream)
-            var filter: DocFilter =
-              if (pred == null) null else AttrSidecar.openCursor(attrDir, slice, pred)
-            val cursor = filter
-            if (tomb != null) filter = tomb.compose(slice, filter)
-            try BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter).toArray
-            finally cursor match {
-              case c: AutoCloseable => c.close()
-              case _ =>
-            }
+    // fielded sources share the doc space; the first field's sidecar and
+    // tombstones apply (the walk's filter-context convention)
+    val sources = fields.map(f => PostingSource(spark, f.indexDir))
+    Walks.requireSharedDocSpace(sources)
+    PostingSource.walk(sources.map(_ -> terms), attrFilter, scored = false) { s =>
+      // fresh monotone cursors per field pass (each walks its own
+      // ascending stream)
+      val perField = (0 until nF).map(fi =>
+        s.matchingIds(qTerms, isAnd, msm, src = fi).fold(Array.emptyLongArray)(_.toArray))
+      val union = perField.flatten.distinct.sorted.toArray // each doc once
+      if (union.isEmpty) Iterator.empty
+      else {
+        val fmt =
+          if (pat == null) null
+          else java.time.format.DateTimeFormatter.ofPattern(pat)
+            .withZone(java.time.ZoneOffset.UTC)
+        val reader = s.reader()
+        val kwIdx = if (fmt == null) reader.kwIndex(kwF) else -1
+        val counts = scala.collection.mutable.HashMap.empty[String, Long]
+        union.foreach { id =>
+          if (reader.seek(id)) {
+            val k =
+              if (fmt == null) reader.kwValue(kwIdx)
+              else fmt.format(java.time.Instant.ofEpochMilli(reader.tsMillis))
+            counts.update(k, counts.getOrElse(k, 0L) + 1L)
           }
-        }.toSeq
-        val union = perField.flatten.distinct.sorted.toArray // each doc once
-        if (union.isEmpty) Iterator.empty
-        else {
-          val fmt =
-            if (pat == null) null
-            else java.time.format.DateTimeFormatter.ofPattern(pat)
-              .withZone(java.time.ZoneOffset.UTC)
-          val reader = AttrSidecar.openReader(attrDir, slice)
-          val kwIdx = if (fmt == null) reader.kwIndex(kwF) else -1
-          try {
-            val counts = scala.collection.mutable.HashMap.empty[String, Long]
-            union.foreach { id =>
-              if (reader.seek(id)) {
-                val k =
-                  if (fmt == null) reader.kwValue(kwIdx)
-                  else fmt.format(java.time.Instant.ofEpochMilli(reader.tsMillis))
-                counts.update(k, counts.getOrElse(k, 0L) + 1L)
-              }
-            }
-            counts.iterator.toArray.iterator
-          } finally reader.close()
         }
+        counts.iterator.toArray.iterator
       }
+    }
       .toDF("key", "n")
       .groupBy($"key")
       .agg(sum($"n").as("n"))
@@ -2023,10 +1741,7 @@ object Facets {
         .toDF("k1", "k2", "n", "sm", "mn", "mx")
 
     val bAllow = if (idAllow == null) null else spark.sparkContext.broadcast(idAllow)
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, exTerms.toArray))
-    val bDirs = spark.sparkContext.broadcast(segmentDirs.toArray)
-    val bTombs = spark.sparkContext.broadcast(
-      segmentDirs.map(graft.index.Tombstones.handle).toArray)
+    val qTerms = terms.toArray
     val msm = minShouldMatch
     val pat = keyPattern
     val kwF = kwField
@@ -2034,96 +1749,54 @@ object Facets {
     val numF = numField
     val numW = numWidth
     val metF = metricField
-    val pred = attrFilter
 
-    val blocks = segmentDirs.zipWithIndex
-      .map { case (d, i) =>
-        IndexBuilder.readPostings(spark, d)
-          .where($"term".isin(terms ++ exTerms: _*))
-          .select(
-            lit(i).as("seg"), $"slice", $"term", $"block_id", $"doc_id_min",
-            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss"
-          )
-      }
-      .reduce(_ unionByName _)
-      .as[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-
-    blocks
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key, rows) =>
-        val (seg, slice) = key
-        val segDir = bDirs.value(seg)
-        val (qTerms, exT) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._3)
-        def iterOf(t: String): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._5, r._4))
-              .map(r => BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11, 0.0))
-            new PostingIter(0, 0.0, refs, 1.0) // scoring unused: bounds/avgdl moot
-          }
-        val iters = qTerms.iterator.flatMap(iterOf).toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(segDir, slice, pred)
-          val predCursor = filter // close after the walk
-          val exIters = exT.iterator.flatMap(iterOf).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          val tomb = bTombs.value(seg)
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          if (bAllow != null)
-            filter = Filters.and(filter, new SortedIdsFilter(bAllow.value))
+    new PostingSource(spark, segmentDirs).walk(terms ++ exTerms, attrFilter, scored = false) { s =>
+      val allow = if (bAllow == null) null else new SortedIdsFilter(bAllow.value)
+      s.matchingIds(qTerms, isAnd, msm, exTerms, also = allow) match {
+        case None => Iterator.empty
+        case Some(ids) =>
           val fmt =
             if (pat == null) null
             else java.time.format.DateTimeFormatter.ofPattern(pat)
               .withZone(java.time.ZoneOffset.UTC)
-          val reader = AttrSidecar.openReader(segDir, slice)
+          val reader = s.reader()
           // resolve the field once per slice (loud on undeclared);
           // kwField + pattern together = composite (terms × date) keys
           val numIdx = if (numF != null) reader.numIndex(numF) else -1
           val kwIdx = if (numF == null && kwF != null) reader.kwIndex(kwF) else -1
           val kw2Idx = if (kwF2 != null) reader.kwIndex(kwF2) else -1
           val metIdx = if (metF != null) reader.numIndex(metF) else -1
-          try {
-            // value = (n, sum, min, max) of the metric attr; count-only
-            // aggs leave the tail at (0, MaxValue, MinValue) and drop it
-            val counts = scala.collection.mutable.HashMap.empty[(String, String), Array[Long]]
-            BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter).foreach { id =>
-              if (reader.seek(id)) {
-                val k: (String, String) =
-                  if (numF != null)
-                    ((java.lang.Math.floorDiv(reader.numValue(numIdx), numW) * numW).toString, "")
-                  else if (kwF2 != null)
-                    (reader.kwValue(kwIdx), reader.kwValue(kw2Idx))
-                  else if (fmt != null && kwF != null)
-                    (reader.kwValue(kwIdx),
-                      fmt.format(java.time.Instant.ofEpochMilli(reader.tsMillis)))
-                  else if (fmt == null) (reader.kwValue(kwIdx), "")
-                  else (fmt.format(java.time.Instant.ofEpochMilli(reader.tsMillis)), "")
-                val acc = counts.getOrElseUpdate(k,
-                  Array(0L, 0L, Long.MaxValue, Long.MinValue))
-                acc(0) += 1L
-                if (metIdx >= 0) {
-                  val v = reader.numValue(metIdx)
-                  acc(1) += v
-                  if (v < acc(2)) acc(2) = v
-                  if (v > acc(3)) acc(3) = v
-                }
+          // value = (n, sum, min, max) of the metric attr; count-only
+          // aggs leave the tail at (0, MaxValue, MinValue) and drop it
+          val counts = scala.collection.mutable.HashMap.empty[(String, String), Array[Long]]
+          ids.foreach { id =>
+            if (reader.seek(id)) {
+              val k: (String, String) =
+                if (numF != null)
+                  ((java.lang.Math.floorDiv(reader.numValue(numIdx), numW) * numW).toString, "")
+                else if (kwF2 != null)
+                  (reader.kwValue(kwIdx), reader.kwValue(kw2Idx))
+                else if (fmt != null && kwF != null)
+                  (reader.kwValue(kwIdx),
+                    fmt.format(java.time.Instant.ofEpochMilli(reader.tsMillis)))
+                else if (fmt == null) (reader.kwValue(kwIdx), "")
+                else (fmt.format(java.time.Instant.ofEpochMilli(reader.tsMillis)), "")
+              val acc = counts.getOrElseUpdate(k,
+                Array(0L, 0L, Long.MaxValue, Long.MinValue))
+              acc(0) += 1L
+              if (metIdx >= 0) {
+                val v = reader.numValue(metIdx)
+                acc(1) += v
+                if (v < acc(2)) acc(2) = v
+                if (v > acc(3)) acc(3) = v
               }
             }
-            counts.iterator.map { case ((a, b), acc) =>
-              (a, b, acc(0), acc(1), acc(2), acc(3))
-            }.toArray.iterator
-          } finally {
-            reader.close()
-            predCursor match {
-              case c: AutoCloseable => c.close()
-              case _ =>
-            }
           }
-        }
+          counts.iterator.map { case ((a, b), acc) =>
+            (a, b, acc(0), acc(1), acc(2), acc(3))
+          }.toArray.iterator
       }
+    }
       .toDF("k1", "k2", "n", "sm", "mn", "mx")
       .groupBy($"k1", $"k2")
       .agg(sum($"n").as("n"), sum($"sm").as("sm"),

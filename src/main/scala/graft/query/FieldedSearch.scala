@@ -2,8 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.index.{AttrPred, AttrSidecar, IndexBuilder}
-import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
+import graft.index.{AttrPred, IndexBuilder}
 
 /** Multi-field text search — the reference provisions THREE analyzed text
   * fields side by side (comment/data/dataPresentation,
@@ -22,27 +21,25 @@ import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
   * Sum order is fields-outer × terms-inner, mirrored by
   * NaiveBm25.fieldedTopK and the DuckDB oracle.
   *
-  * Scale shape: per-field posting scans are pushdown-filtered to the
-  * query terms; ONE shuffle co-locates all fields' matched blocks by
-  * slice; per-slice WAND over |fields|·|terms| iterators; nSlices·k merge.
-  * Building per-field indexes costs one column-pruned pass per field over
-  * the columnar source — the parquet scan reads only that field's column.
+  * Each field is one [[PostingSource]] (an index, or a segment family for
+  * [[topKMulti]]); the walks are [[Walks.fieldedTopK]] /
+  * [[Walks.fieldedPhraseTopK]]: per-field posting scans pushdown-filtered
+  * to the query terms, ONE shuffle co-locating all fields' matched blocks
+  * by (segment, slice), nSlices·k merge. Filter context (`attrFilter` on
+  * the sidecar, or the ad-hoc `docFilter` Column) and tombstones are read
+  * from the FIRST field's index — the shared-doc-space convention.
   */
 object FieldedSearch {
 
   final case class Field(name: String, indexDir: String, boost: Double)
 
-  /** Filter context = ES bool-query filter clause next to the multi_match,
-    * evaluated against the FIRST field's doc attributes (all field indexes
-    * share the docID space and attributes): `attrFilter` streams the first
-    * field's slice sidecar node-locally (no doc-id exchange); `docFilter`
-    * (nullable Column) is the ad-hoc allow-list path.
-    */
-  /** `perFieldTerms` (nullable): per-field allowed term subset — the
-    * fielded prefix/fuzzy rewrites expand PER FIELD dictionary (ES
-    * multi_match rewrites each field against its own terms), so a term
-    * may participate in one field and not another; masked-out (field,
-    * term) pairs neither score nor make docs candidates.
+  private def sources(spark: SparkSession, fields: Seq[Field]): Seq[(PostingSource, Double)] =
+    fields.map(f => PostingSource(spark, f.indexDir) -> f.boost)
+
+  /** Fielded most_fields top-k. `perFieldTerms` (nullable): per-field
+    * allowed term subset — the fielded rewrites expand PER FIELD
+    * dictionary (ES multi_match rewrites each field against its own
+    * terms), so a term may participate in one field and not another.
     */
   def topK(
       spark: SparkSession,
@@ -52,127 +49,13 @@ object FieldedSearch {
       docFilter: Column = null,
       attrFilter: AttrPred = null,
       perFieldTerms: Seq[Set[String]] = null
-  ): DataFrame = {
-    import spark.implicits._
-    require(fields.nonEmpty)
-    require(docFilter == null || attrFilter == null,
-      "pass docFilter (ad-hoc Column) or attrFilter (typed sidecar predicate), not both")
-    require(perFieldTerms == null || perFieldTerms.size == fields.size,
-      "perFieldTerms must align with fields")
-    val terms = queryTerms.distinct
-
-    val stats = fields.map(f => IndexBuilder.readStats(spark, f.indexDir))
-    val n = stats.head.n_docs
-    require(stats.forall(_.n_docs == n),
-      "field indexes must share the docID space (same corpus, same urls)")
-    val metas = fields.map(f => IndexBuilder.readMeta(f.indexDir))
-    require(metas.map(_.nSlices).distinct.size == 1,
-      "field indexes must share the slice layout")
-    val avgDls = stats.map(s => if (s.avg_dl > 0) s.avg_dl else 1.0).toArray
-
-    // per-field df for the query terms (tiny pushdown reads)
-    val dfs: Array[Map[String, Long]] = fields.map { f =>
-      IndexBuilder.readTerms(spark, f.indexDir)
-        .where($"term".isin(terms: _*))
-        .collect().map(t => t.term -> t.doc_freq).toMap
-    }.toArray
-    if (!dfs.exists(_.nonEmpty))
-      return spark.emptyDataset[Search.QueryHit].toDF()
-
-    // weight per (field, term) = boost · idf_field(term); 0-df pairs absent
-    val qTerms = terms.toArray
-    val boosts = fields.map(_.boost).toArray
-    val weights: Array[Array[Double]] = Array.tabulate(fields.size) { fi =>
-      qTerms.map(t => boosts(fi) * NaiveBm25.idf(n, dfs(fi).getOrElse(t, 0L)))
-    }
-    // per-(field, term) participation mask (all-true without a rewrite)
-    val mask: Array[Array[Boolean]] = Array.tabulate(fields.size) { fi =>
-      qTerms.map(t => perFieldTerms == null || perFieldTerms(fi).contains(t))
-    }
-    val bCtx = spark.sparkContext.broadcast((qTerms, weights, avgDls, mask))
-
-    val blocks = fields.zipWithIndex
-      .map { case (f, fi) =>
-        // per-field pushdown follows the field's own rewrite set: blocks
-        // of masked-out (field, term) pairs never leave the scan
-        val fTerms = if (perFieldTerms == null) terms else terms.filter(perFieldTerms(fi))
-        IndexBuilder.readPostings(spark, f.indexDir)
-          .where($"term".isin(fTerms: _*))
-          .select(
-            lit(fi).as("fld"), $"slice", $"term", $"block_id", $"doc_id_min",
-            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-          )
-      }
-      .reduce(_ unionByName _)
-      .as[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    // tombstones live on the FIRST field's index (one logical delete per
-    // doc — the shared-doc-space convention, same as the attr sidecar)
-    val tomb = graft.index.Tombstones.handle(fields.head.indexDir)
-    def wand(slice: Int,
-             rows: Iterator[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)],
-             base: DocFilter): Iterator[Search.QueryHit] = {
-      val (ts, ws, avgs, msk) = bCtx.value
-      val byFieldTerm = rows.toArray.groupBy(r => (r._1, r._3))
-      // iterator order: fields outer × terms inner (the scoring contract)
-      val iters = (for {
-        fi <- avgs.indices.iterator
-        ti <- ts.indices.iterator
-        if msk(fi)(ti)
-        rs <- byFieldTerm.get((fi, ts(ti))).iterator
-      } yield {
-        val refs = rs
-          .sortBy(r => (r._5, r._4))
-          .map(r => BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11, r._12))
-        new PostingIter(fi * ts.length + ti, ws(fi)(ti), refs, avgs(fi))
-      }).toArray
-      val filter = if (tomb == null) base else tomb.compose(slice, base)
-      BlockMaxWand.or(iters, k, filter)
-        .iterator.map(h => Search.QueryHit(h.docId, h.score))
-    }
-
-    val attrDir = fields.head.indexDir
-    val localTopK =
-      if (docFilter == null && attrFilter == null)
-        blocks
-          .groupByKey(_._2) // slice — ONE task sees every field of its doc range
-          .flatMapGroups { (slice, rows) => wand(slice, rows, null) }
-      else if (attrFilter != null) {
-        val pred = attrFilter
-        blocks
-          .groupByKey(_._2)
-          .flatMapGroups { (slice, rows) =>
-            val cur = AttrSidecar.openCursor(attrDir, slice, pred)
-            try wand(slice, rows, cur)
-            finally cur.close()
-          }
-      } else {
-        val filterIds = spark.read.parquet(s"${fields.head.indexDir}/docs")
-          .where(docFilter)
-          .select($"slice".cast("int"), $"doc_id")
-          .as[(Int, Long)]
-        blocks
-          .groupByKey(_._2)
-          .cogroup(filterIds.groupByKey(_._1)) { (slice, rows, fids) =>
-            val allow = fids.map(_._2).toArray
-            if (allow.isEmpty) Iterator.empty
-            else {
-              java.util.Arrays.sort(allow)
-              wand(slice, rows, new FilterIter(allow))
-            }
-          }
-      }
-
-    localTopK.toDF().orderBy(desc("score"), asc("doc_id")).limit(k)
-  }
+  ): DataFrame =
+    Walks.fieldedTopK(sources(spark, fields), queryTerms, k, docFilter, attrFilter, perFieldTerms)
 
   /** Fielded ES prefix query (`multi_match` carries term-level rewrites):
-    * the prefix expands against EACH field's own dictionary (range read,
-    * df-desc cap per field — a term hot in the title need not be in the
-    * body's cap and vice versa), then one most_fields WAND over the union
-    * with per-(field, term) masks: a rewrite participates only in the
-    * field whose dictionary produced it. Scoring stays scoring_boolean
-    * (per-expansion per-field idf), composing with filter context.
+    * the prefix expands against EACH field's own dictionary (df-desc cap
+    * per field), then one masked most_fields WAND over the union — a
+    * rewrite participates only in the field whose dictionary produced it.
     */
   def prefixTopK(
       spark: SparkSession,
@@ -182,26 +65,12 @@ object FieldedSearch {
       maxExpansions: Int = 128,
       docFilter: Column = null,
       attrFilter: AttrPred = null
-  ): DataFrame = {
-    import spark.implicits._
-    require(prefix.nonEmpty, "empty prefix")
-    val perField = fields.map { f =>
-      IndexBuilder.readTerms(spark, f.indexDir)
-        .where($"term".startsWith(prefix))
-        .orderBy(desc("doc_freq"), asc("term"))
-        .limit(maxExpansions)
-        .collect().map(_.term).toSet
-    }
-    val union = perField.reduce(_ ++ _).toSeq.sorted
-    if (union.isEmpty) return spark.emptyDataset[Search.QueryHit].toDF()
-    topK(spark, fields, union, k, docFilter, attrFilter, perFieldTerms = perField)
-  }
+  ): DataFrame =
+    Walks.fieldedRewriteTopK(sources(spark, fields), PostingSource.prefix(prefix),
+      maxExpansions, k, docFilter, attrFilter)
 
-  /** Fielded ES fuzzy query — `multi_match` accepts `fuzziness`
-    * (`ElasticSearchStorage.cs` fields are queried together in practice):
-    * per-field dictionary edit-distance expansion (codegen levenshtein +
-    * length pre-cut, df-desc cap per field), then the same masked
-    * most_fields WAND as [[prefixTopK]].
+  /** Fielded ES fuzzy query — per-field edit-distance expansion, then the
+    * same masked most_fields WAND as [[prefixTopK]].
     */
   def fuzzyTopK(
       spark: SparkSession,
@@ -212,28 +81,12 @@ object FieldedSearch {
       maxExpansions: Int = 64,
       docFilter: Column = null,
       attrFilter: AttrPred = null
-  ): DataFrame = {
-    import spark.implicits._
-    require(term.nonEmpty, "empty term")
-    require(maxEdits >= 0 && maxEdits <= 2, "ES caps fuzziness at 2 edits")
-    val perField = fields.map { f =>
-      IndexBuilder.readTerms(spark, f.indexDir)
-        .where(abs(length($"term") - lit(term.length)) <= maxEdits)
-        .where(levenshtein($"term", lit(term)) <= maxEdits)
-        .orderBy(desc("doc_freq"), asc("term"))
-        .limit(maxExpansions)
-        .collect().map(_.term).toSet
-    }
-    val union = perField.reduce(_ ++ _).toSeq.sorted
-    if (union.isEmpty) return spark.emptyDataset[Search.QueryHit].toDF()
-    topK(spark, fields, union, k, docFilter, attrFilter, perFieldTerms = perField)
-  }
+  ): DataFrame =
+    Walks.fieldedRewriteTopK(sources(spark, fields), PostingSource.fuzzy(term, maxEdits),
+      maxExpansions, k, docFilter, attrFilter)
 
   /** Fielded ES wildcard query — `query_string` over multiple fields
-    * carries `*`/`?` patterns (`server:web-*` is a Kibana day-one query):
-    * the pattern compiles once ([[Search.wildcardToRegex]]) and expands
-    * against EACH field's dictionary via [[regexpTopK]]'s per-field
-    * anchored-regex scan with the literal-prefix pushdown pre-cut.
+    * carries `*`/`?` patterns (`server:web-*` is a Kibana day-one query).
     */
   def wildcardTopK(
       spark: SparkSession,
@@ -243,20 +96,11 @@ object FieldedSearch {
       maxExpansions: Int = 128,
       docFilter: Column = null,
       attrFilter: AttrPred = null
-  ): DataFrame = {
-    val (regex, prefix) = Search.wildcardToRegex(pattern)
-    regexpTopK(spark, fields, regex, k, maxExpansions, docFilter, attrFilter,
-      prefixHint = prefix)
-  }
+  ): DataFrame =
+    Walks.fieldedRewriteTopK(sources(spark, fields), PostingSource.wildcard(pattern),
+      maxExpansions, k, docFilter, attrFilter)
 
-  /** Fielded ES regexp query: the anchored regex expands against EACH
-    * field's own dictionary (codegen `rlike` scan, `prefixHint` pushdown
-    * range pre-cut, df-desc cap PER FIELD — a term hot in the title need
-    * not make the body's cap and vice versa), then one most_fields WAND
-    * over the union with per-(field, term) participation masks — the
-    * same expansion + mask machinery as [[prefixTopK]]/[[fuzzyTopK]].
-    * Scoring stays scoring_boolean (per-expansion per-field idf).
-    */
+  /** Fielded ES regexp query (anchored regex per field dictionary). */
   def regexpTopK(
       spark: SparkSession,
       fields: Seq[Field],
@@ -266,36 +110,15 @@ object FieldedSearch {
       docFilter: Column = null,
       attrFilter: AttrPred = null,
       prefixHint: String = ""
-  ): DataFrame = {
-    import spark.implicits._
-    require(regex.nonEmpty, "empty regex")
-    val perField = fields.map { f =>
-      val base = IndexBuilder.readTerms(spark, f.indexDir)
-      val cut = if (prefixHint.isEmpty) base else base.where($"term".startsWith(prefixHint))
-      cut
-        .where($"term".rlike(s"^(?:$regex)$$"))
-        .orderBy(desc("doc_freq"), asc("term"))
-        .limit(maxExpansions)
-        .collect().map(_.term).toSet
-    }
-    val union = perField.reduce(_ ++ _).toSeq.sorted
-    if (union.isEmpty) return spark.emptyDataset[Search.QueryHit].toDF()
-    topK(spark, fields, union, k, docFilter, attrFilter, perFieldTerms = perField)
-  }
+  ): DataFrame =
+    Walks.fieldedRewriteTopK(sources(spark, fields), PostingSource.regexp(regex, prefixHint),
+      maxExpansions, k, docFilter, attrFilter)
 
   /** Fielded EXACT-PHRASE top-k (ES `most_fields` over `match_phrase`
-    * clauses — the composition ES offers freely in one bool query):
-    * score(d) = Σ_f boost_f · idfSum_f · impact(freq_f(d), dl_f(d),
-    * avgdl_f), summed in field order; candidates = phrase occurs in ≥1
-    * field; a field missing any phrase term corpus-wide contributes
-    * nothing (Lucene PhraseQuery semantics). Mirrored exactly by
-    * NaiveBm25.fieldedPhraseTopK and the DuckDB oracle.
-    *
-    * Scale shape: same as topK — one shuffle keys all fields' matched
-    * blocks by slice; each slice task enumerates phrase matches per field
-    * (leapfrog + positional verify) and merges per-doc contributions
-    * before its local top-k cut (per-field matches materialize per slice;
-    * phrase selectivity keeps that small).
+    * clauses): score(d) = Σ_f boost_f · idfSum_f · impact(freq_f(d),
+    * dl_f(d), avgdl_f), summed in field order; a field missing any phrase
+    * term corpus-wide contributes nothing (Lucene PhraseQuery semantics).
+    * Mirrored exactly by NaiveBm25.fieldedPhraseTopK and the DuckDB oracle.
     */
   def phraseTopK(
       spark: SparkSession,
@@ -303,114 +126,9 @@ object FieldedSearch {
       phraseTerms: Seq[String],
       k: Int,
       docFilter: Column = null,
-      attrFilter: graft.index.AttrPred = null
-  ): DataFrame = {
-    import spark.implicits._
-    require(fields.nonEmpty && phraseTerms.nonEmpty)
-    require(docFilter == null || attrFilter == null,
-      "pass docFilter (ad-hoc Column) or attrFilter (typed sidecar predicate), not both")
-    val distinctTerms = phraseTerms.distinct
-    val offsets: Array[Array[Int]] = distinctTerms.map { t =>
-      phraseTerms.zipWithIndex.collect { case (pt, i) if pt == t => i }.toArray
-    }.toArray
-
-    val stats = fields.map(f => IndexBuilder.readStats(spark, f.indexDir))
-    val n = stats.head.n_docs
-    require(stats.forall(_.n_docs == n), "field indexes must share the docID space")
-    require(fields.map(f => IndexBuilder.readMeta(f.indexDir).nSlices).distinct.size == 1,
-      "field indexes must share the slice layout")
-    val avgDls = stats.map(s => if (s.avg_dl > 0) s.avg_dl else 1.0).toArray
-    // per-field idfSum over phrase POSITIONS; 0 when any term is missing
-    // from the field (that field then matches nothing)
-    val idfSums: Array[Double] = fields.zipWithIndex.map { case (f, fi) =>
-      val dfs = IndexBuilder.readTerms(spark, f.indexDir)
-        .where($"term".isin(distinctTerms: _*))
-        .collect().map(t => t.term -> t.doc_freq).toMap
-      if (distinctTerms.exists(t => !dfs.contains(t))) 0.0
-      else phraseTerms.map(t => NaiveBm25.idf(n, dfs(t))).sum
-    }.toArray
-    if (idfSums.forall(_ == 0.0)) return spark.emptyDataset[Search.QueryHit].toDF()
-    val boosts = fields.map(_.boost).toArray
-    val bCtx = spark.sparkContext.broadcast((distinctTerms.toArray, offsets, idfSums, boosts, avgDls))
-
-    val blocks = fields.zipWithIndex
-      .filter { case (_, fi) => idfSums(fi) > 0.0 }
-      .map { case (f, fi) =>
-        IndexBuilder.readPostings(spark, f.indexDir)
-          .where($"term".isin(distinctTerms: _*))
-          .select(
-            lit(fi).as("fld"), $"slice", $"term", $"block_id", $"doc_id_min",
-            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-          )
-      }
-      .reduce(_ unionByName _)
-      .as[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    val tomb = graft.index.Tombstones.handle(fields.head.indexDir)
-    def run(slice: Int,
-            rows: Iterator[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)],
-            filterOf: () => DocFilter): Iterator[Search.QueryHit] = {
-      val (qTerms, offs, sums, bst, avgs) = bCtx.value
-      val byField = rows.toArray.groupBy(_._1)
-      // per-doc sums accumulate in FIELD ORDER (the scoring contract)
-      val acc = new scala.collection.mutable.LongMap[Double]
-      avgs.indices.foreach { fi =>
-        if (sums(fi) > 0.0) byField.get(fi).foreach { rs =>
-          val byTerm = rs.groupBy(_._3)
-          if (qTerms.forall(byTerm.contains)) {
-            val iters = qTerms.map { t =>
-              val refs = byTerm(t)
-                .sortBy(r => (r._5, r._4))
-                .map(r => BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11, r._12))
-              new PostingIter(0, 0.0, refs, avgs(fi))
-            }
-            val f0 = filterOf() // fresh monotone cursor per field pass
-            val f = if (tomb == null) f0 else tomb.compose(slice, f0)
-            try {
-              BlockMaxWand.phraseMatches(iters, offs, f).foreach { case (doc, freq, dl) =>
-                val sc = bst(fi) * sums(fi) *
-                  IndexBuilder.impact(freq, dl, avgs(fi))
-                acc.update(doc, acc.getOrElse(doc, 0.0) + sc)
-              }
-            } finally f0 match {
-              case c: AutoCloseable => c.close()
-              case _ =>
-            }
-          }
-        }
-      }
-      acc.toArray.sortBy { case (doc, s) => (-s, doc) }.take(k)
-        .iterator.map { case (doc, s) => Search.QueryHit(doc, s) }
-    }
-
-    val attrDir = fields.head.indexDir
-    val localTopK =
-      if (docFilter == null && attrFilter == null)
-        blocks.groupByKey(_._2).flatMapGroups { (slice, rows) => run(slice, rows, () => null) }
-      else if (attrFilter != null) {
-        val pred = attrFilter
-        blocks.groupByKey(_._2).flatMapGroups { (slice, rows) =>
-          run(slice, rows, () => AttrSidecar.openCursor(attrDir, slice, pred))
-        }
-      } else {
-        val filterIds = spark.read.parquet(s"$attrDir/docs")
-          .where(docFilter)
-          .select($"slice".cast("int"), $"doc_id")
-          .as[(Int, Long)]
-        blocks
-          .groupByKey(_._2)
-          .cogroup(filterIds.groupByKey(_._1)) { (slice, rows, fids) =>
-            val allow = fids.map(_._2).toArray
-            if (allow.isEmpty) Iterator.empty
-            else {
-              java.util.Arrays.sort(allow)
-              run(slice, rows, () => new FilterIter(allow))
-            }
-          }
-      }
-
-    localTopK.toDF().orderBy(desc("score"), asc("doc_id")).limit(k)
-  }
+      attrFilter: AttrPred = null
+  ): DataFrame =
+    Walks.fieldedPhraseTopK(sources(spark, fields), phraseTerms, k, docFilter, attrFilter)
 
   /** One field = a SEGMENT FAMILY (multi-segment fielded search — ES
     * `multi_match` across its `{prefix}-*` indices in one query). All
@@ -422,110 +140,18 @@ object FieldedSearch {
   final case class FieldFamily(name: String, segmentDirs: Seq[String], boost: Double)
 
   /** Fielded most_fields top-k over segment families; per-field global
-    * stats (N, avgdl_f, df_f summed over segments), WAND bounds re-derived
-    * from the avgdl-independent max_tf/min_dl at each field's global
-    * avgdl (exact-at-own-avgdl stored bounds don't transfer — same rule
-    * as MultiSearcher). `attrFilter` streams the FIRST field's per-segment
-    * sidecar (shared doc space).
+    * stats (N, avgdl_f, df_f summed over segments) — the
+    * [[PostingSource]] bound rule per field.
     */
   def topKMulti(
       spark: SparkSession,
       fields: Seq[FieldFamily],
       queryTerms: Seq[String],
       k: Int,
-      attrFilter: graft.index.AttrPred = null
-  ): DataFrame = {
-    import spark.implicits._
-    require(fields.nonEmpty)
-    val nSegs = fields.head.segmentDirs.size
-    require(fields.forall(_.segmentDirs.size == nSegs),
-      "every field family must have the same number of segments")
-    val terms = queryTerms.distinct
-
-    // per (field, seg) stats; segmentation shared → one base sequence
-    val segStats = fields.map(_.segmentDirs.map(IndexBuilder.readStats(spark, _)))
-    (0 until nSegs).foreach { si =>
-      require(segStats.map(_(si).n_docs).distinct.size == 1,
-        s"segment $si docs differ across fields — families must share the segmentation")
-    }
-    val bases = segStats.head.map(_.n_docs).scanLeft(0L)(_ + _).init
-    val n = segStats.head.map(_.n_docs).sum
-    val avgDls = segStats.map { ss =>
-      val tok = ss.map(_.total_tokens).sum
-      if (n > 0 && tok > 0) tok.toDouble / n else 1.0
-    }.toArray
-
-    // per-field global df per term (tiny pushdown reads over every segment)
-    val dfs: Array[Map[String, Long]] = fields.map { f =>
-      f.segmentDirs
-        .map(d => IndexBuilder.readTerms(spark, d).where($"term".isin(terms: _*)).toDF())
-        .reduce(_ unionByName _)
-        .groupBy($"term").agg(sum($"doc_freq").as("df"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }.toArray
-    if (!dfs.exists(_.nonEmpty)) return spark.emptyDataset[Search.QueryHit].toDF()
-
-    val qTerms = terms.toArray
-    val boosts = fields.map(_.boost).toArray
-    val weights: Array[Array[Double]] = Array.tabulate(fields.size) { fi =>
-      qTerms.map(t => boosts(fi) * NaiveBm25.idf(n, dfs(fi).getOrElse(t, 0L)))
-    }
-    val bCtx = spark.sparkContext.broadcast((qTerms, weights, avgDls))
-    val bBases = spark.sparkContext.broadcast(bases.toArray)
-
-    val blocks = (for {
-      (f, fi) <- fields.zipWithIndex
-      (d, si) <- f.segmentDirs.zipWithIndex
-    } yield IndexBuilder.readPostings(spark, d)
-      .where($"term".isin(terms: _*))
-      .select(
-        lit(fi).as("fld"), lit(si).as("seg"), $"slice", $"term", $"block_id",
-        $"doc_id_min", $"doc_id_max", $"count", $"deltas", $"tfs", $"dls",
-        $"poss", $"max_tf", $"min_dl"
-      ))
-      .reduce(_ unionByName _)
-      .as[(Int, Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Int, Int)]
-
-    type Row = (Int, Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Int, Int)
-    val bTombs = spark.sparkContext.broadcast(
-      fields.head.segmentDirs.map(graft.index.Tombstones.handle).toArray)
-    def wand(seg: Int, slice: Int, rows: Iterator[Row], base: DocFilter): Iterator[Search.QueryHit] = {
-      val (ts, ws, avgs) = bCtx.value
-      val byFieldTerm = rows.toArray.groupBy(r => (r._1, r._4))
-      val iters = (for {
-        fi <- avgs.indices.iterator
-        ti <- ts.indices.iterator
-        rs <- byFieldTerm.get((fi, ts(ti))).iterator
-      } yield {
-        val refs = rs
-          .sortBy(r => (r._6, r._5))
-          .map(r => BlockRef(r._6, r._7, r._8, r._9, r._10, r._11, r._12,
-            IndexBuilder.impact(r._13, r._14, avgs(fi))))
-        new PostingIter(fi * ts.length + ti, ws(fi)(ti), refs, avgs(fi))
-      }).toArray
-      val tomb = bTombs.value(seg)
-      val filter = if (tomb == null) base else tomb.compose(slice, base)
-      val docBase = bBases.value(seg)
-      BlockMaxWand.or(iters, k, filter)
-        .iterator.map(h => Search.QueryHit(docBase + h.docId, h.score))
-    }
-
-    val attrDirs = fields.head.segmentDirs.toArray
-    val bAttrDirs = spark.sparkContext.broadcast(attrDirs)
-    val localTopK =
-      if (attrFilter == null)
-        blocks.groupByKey(r => (r._2, r._3)).flatMapGroups { (key, rows) => wand(key._1, key._2, rows, null) }
-      else {
-        val pred = attrFilter
-        blocks.groupByKey(r => (r._2, r._3)).flatMapGroups { (key, rows) =>
-          val cur = AttrSidecar.openCursor(bAttrDirs.value(key._1), key._2, pred)
-          try wand(key._1, key._2, rows, cur)
-          finally cur.close()
-        }
-      }
-
-    localTopK.toDF().orderBy(desc("score"), asc("doc_id")).limit(k)
-  }
+      attrFilter: AttrPred = null
+  ): DataFrame =
+    Walks.fieldedTopK(fields.map(f => new PostingSource(spark, f.segmentDirs) -> f.boost),
+      queryTerms, k, attrFilter = attrFilter)
 
   /** ES `combined_fields` (Lucene CombinedFieldQuery / BM25F): the fields
     * are scored as ONE virtual field — per-term combined

@@ -2,10 +2,12 @@ package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.index.{AttrPred, AttrSidecar, IndexBuilder}
-import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
+import graft.index.{AttrPred, IndexBuilder}
 
-/** Distributed BM25 top-k over the on-disk index.
+/** Distributed BM25 over ONE on-disk index — the single-index front-end.
+  * The index is a one-segment [[PostingSource]] at base 0, and every
+  * query shape below delegates to its one walk in [[Walks]] (the same
+  * walk [[MultiSearcher]] runs over a segment family).
   *
   * Plan (scale-first — nothing term-sized ever reaches the driver):
   *   1. dictionary lookup: `terms` table filtered to the ≤ few query
@@ -17,12 +19,12 @@ import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
   *   3. shuffle the surviving blocks by doc-range `slice` — all query
   *      terms' postings for one doc range land in one task (the only
   *      shuffle, and it moves just the query terms' blocks);
-  *   4. per-slice block-max WAND → slice-local top-k (k rows per slice);
+  *   4. per-slice walk (block-max WAND, phrase, …) → slice-local top-k;
   *   5. global top-k = sort (score desc, doc_id asc) + limit over
   *      nSlices·k rows.
   *
   * Slices are disjoint doc ranges, so slice-local top-k union ⊇ global
-  * top-k — the merge is exact.
+  * top-k — the merge is exact. Many queries in one job: [[Searcher.topKBatch]].
   */
 object Search {
 
@@ -50,8 +52,8 @@ object Search {
     * For low-selectivity DATE ranges also consider time-bucketed segments
     * ([[graft.index.TimeBuckets]]): whole-segment pruning first, sidecar
     * as the residual intra-bucket cut.
-    */
-  /** `mustNot`: ES `bool.must_not` terms — docs containing ANY of them
+    *
+    * `mustNot`: ES `bool.must_not` terms — docs containing ANY of them
     * are excluded (non-scoring, like filter context). The excluded
     * terms' posting blocks ride the same single exchange as the query
     * terms'; each slice task walks them as a monotone exclusion cursor
@@ -70,6 +72,11 @@ object Search {
     * after it return. Unlike from+size, per-slice heaps stay k-sized at
     * any depth (page 10^5 of a 10^12-doc result set still moves only
     * nSlices·k rows).
+    *
+    * `boosts`: per-term ^boost (ES query_string `term^2.5`), folded into
+    * the term's idf so block-max bounds stay exact. `msmField`: ES
+    * terms_set — a per-doc required-match count from a declared numeric
+    * attr (OR mode only).
     */
   def topK(
       spark: SparkSession,
@@ -82,242 +89,11 @@ object Search {
       mustNot: Seq[String] = Nil,
       minShouldMatch: Int = 1,
       searchAfter: (Double, Long) = null,
-      boosts: Seq[Double] = null, // per-term ^boost (ES query_string `term^2.5`)
-      msmField: String = null // ES terms_set: per-doc required-match count from a declared numeric attr
-  ): DataFrame = {
-    require(docFilter == null || attrFilter == null,
-      "pass docFilter (ad-hoc Column) or attrFilter (typed sidecar predicate), not both")
-    require(msmField == null || mode != "and", "terms_set (msmField) is OR-mode only")
-    require(boosts == null || boosts.size == queryTerms.size,
-      "boosts must align 1:1 with queryTerms")
-    require(boosts == null || boosts.forall(_ > 0.0), "boosts must be positive")
-    import spark.implicits._
-    // ES term boost multiplies the term's whole score contribution —
-    // fold it into the per-term idf so WAND's block-max bounds scale
-    // with it for free (a boosted rare term gets a proportionally
-    // higher bound; gates stay exact)
-    val boostOf: Map[String, Double] =
-      if (boosts == null) Map.empty.withDefaultValue(1.0)
-      else queryTerms.zip(boosts).toMap.withDefaultValue(1.0)
-    val terms = queryTerms.distinct
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-
-    val dfs: Map[String, Long] = IndexBuilder
-      .readTerms(spark, indexDir)
-      .where($"term".isin(terms: _*))
-      .collect()
-      .map(t => t.term -> t.doc_freq)
-      .toMap
-
-    if (mode == "and" && terms.exists(t => !dfs.contains(t)))
-      return spark.emptyDataset[QueryHit].toDF()
-    val present = terms.filter(dfs.contains)
-    if (present.isEmpty || present.size < minShouldMatch)
-      return spark.emptyDataset[QueryHit].toDF()
-
-    val idfs: Array[Double] =
-      terms.map(t => boostOf(t) * NaiveBm25.idf(n, dfs.getOrElse(t, 0L))).toArray
-    // a term in BOTH must and must_not excludes its own matches (ES bool
-    // semantics) — the exclusion iterator is a separate cursor over the
-    // same blocks, so no special-casing needed
-    val exTerms = mustNot.distinct
-    val bTerms = spark.sparkContext.broadcast((terms.toArray, idfs, exTerms.toArray))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-
-    val blocks = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(terms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-      )
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    val isAnd = mode == "and"
-    val msm = minShouldMatch
-    val msmF = msmField
-    val idxDir = indexDir
-    val after =
-      if (searchAfter == null) null
-      else BlockMaxWand.Hit(searchAfter._2, searchAfter._1)
-    type BlockRow = (Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)
-
-    def wand(slice: Int, rows: Iterator[BlockRow], base: DocFilter): Iterator[QueryHit] = {
-      val (qTerms, qIdfs, exT) = bTerms.value
-      val byTerm = rows.toArray.groupBy(_._2)
-      def itersOf(t: String, ti: Int, idf: Double): Option[PostingIter] =
-        byTerm.get(t).map { rs =>
-          val refs = rs
-            .sortBy(r => (r._4, r._3)) // by doc_id_min, block_id
-            .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11))
-          new PostingIter(ti, idf, refs, avgDl)
-        }
-      val iters = qTerms.iterator.zipWithIndex
-        .flatMap { case (t, ti) => itersOf(t, ti, qIdfs(ti)) }.toArray
-      val exIters = exT.iterator.flatMap(t => itersOf(t, 0, 0.0)).toArray
-      var filter = base
-      if (exIters.nonEmpty)
-        filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-      if (tomb != null) filter = tomb.compose(slice, filter)
-      // terms_set: per-doc required count streams from this slice's OWN
-      // sidecar (monotone cursor — scored pivots strictly increase);
-      // closed eagerly since or() returns a materialized Array
-      val msmReader =
-        if (msmF == null) null else graft.index.AttrSidecar.openReader(idxDir, slice)
-      val msmOf: Long => Int =
-        if (msmReader == null) null
-        else {
-          val fi = msmReader.numIndex(msmF) // loud on undeclared
-          id =>
-            if (msmReader.seek(id)) {
-              // a required-count above Int.MaxValue must clamp, not wrap
-              // negative (a wrapped toInt would silently turn "required"
-              // into "match any one term")
-              val v = msmReader.numValue(fi)
-              if (v < 0L || v > Int.MaxValue.toLong) Int.MaxValue else v.toInt
-            } else Int.MaxValue
-        }
-      val hits =
-        try {
-          if (isAnd) {
-            if (iters.length < qTerms.length) Array.empty[BlockMaxWand.Hit]
-            else BlockMaxWand.and(iters, k, filter, after)
-          } else BlockMaxWand.or(iters, k, filter, msm, after, msmOf)
-        } finally if (msmReader != null) msmReader.close()
-      hits.iterator.map(h => QueryHit(h.docId, h.score))
-    }
-
-    val localTopK =
-      if (docFilter == null && attrFilter == null)
-        blocks.groupByKey(_._1).flatMapGroups { (slice, rows) => wand(slice, rows, null) }
-      else if (attrFilter != null) {
-        // sidecar path: plan-identical to the unfiltered search — the WAND
-        // task streams its slice's attribute file locally (no doc-id
-        // exchange at any selectivity). Cursor closed eagerly: wand() is
-        // eager (BlockMaxWand returns a materialized Array of hits).
-        val idxDir = indexDir
-        val pred = attrFilter
-        blocks.groupByKey(_._1).flatMapGroups { (slice, rows) =>
-          val cur = AttrSidecar.openCursor(idxDir, slice, pred)
-          try wand(slice, rows, cur)
-          finally cur.close()
-        }
-      } else {
-        // ad-hoc Column path: matching doc ids per slice (12-byte rows;
-        // docs scan is column-pruned to the predicate columns + slice +
-        // doc_id)
-        val filterIds = spark.read.parquet(s"$indexDir/docs")
-          .where(docFilter)
-          .select($"slice".cast("int"), $"doc_id")
-          .as[(Int, Long)]
-        blocks
-          .groupByKey(_._1)
-          .cogroup(filterIds.groupByKey(_._1)) { (slice, rows, fids) =>
-            val allow = fids.map(_._2).toArray
-            if (allow.isEmpty) Iterator.empty
-            else {
-              java.util.Arrays.sort(allow)
-              wand(slice, rows, new FilterIter(allow))
-            }
-          }
-      }
-
-    localTopK
-      .toDF()
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
-  }
-
-  /** BATCHED top-k: run MANY bool term queries in ONE job — the offline
-    * evaluation / RAG-training-retrieval shape (millions of queries a
-    * day against the same index), where per-query jobs would drown in
-    * scheduling overhead and re-scan hot postings once per query.
-    *
-    * One postings scan covers the UNION of all queries' terms (pushdown
-    * `term IN (...)`); one shuffle keys blocks by slice; each slice task
-    * then runs every query's WAND walk against the slice's shared block
-    * set — a hot term's blocks are fetched and shuffled ONCE however
-    * many queries use it (decode stays per-query: posting cursors are
-    * stateful). Output is exact per-query top-k: per-slice k-heaps, then
-    * a per-qid window cut over nSlices·k·|queries| rows.
-    *
-    * `queries`: (qid, terms, mode) — driver-scale (broadcast), thousands
-    * to low millions; beyond that, chunk the query set and union.
-    */
-  def batchTopK(
-      spark: SparkSession,
-      indexDir: String,
-      queries: Seq[(Long, Seq[String], String)],
-      k: Int
-  ): DataFrame = {
-    import spark.implicits._
-    require(queries.nonEmpty, "no queries")
-    queries.foreach { case (qid, ts, mode) =>
-      require(ts.nonEmpty, s"empty terms for qid $qid")
-      require(mode == "and" || mode == "or", s"bad mode '$mode' for qid $qid")
-    }
-    require(queries.map(_._1).distinct.size == queries.size, "duplicate qids")
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val allTerms = queries.flatMap(_._2).distinct
-    val dfs: Map[String, Long] = IndexBuilder.readTerms(spark, indexDir)
-      .where($"term".isin(allTerms: _*))
-      .collect().map(t => t.term -> t.doc_freq).toMap
-    // compile per query: distinct terms + idfs; drop queries that can't
-    // match (AND with a missing term / no present term)
-    val compiled: Array[(Long, Array[String], Array[Double], Boolean)] = queries.flatMap {
-      case (qid, ts, mode) =>
-        val isAnd = mode == "and"
-        val terms = ts.distinct
-        if (isAnd && terms.exists(t => !dfs.contains(t))) None
-        else if (!terms.exists(dfs.contains)) None
-        else Some((qid, terms.toArray,
-          terms.map(t => NaiveBm25.idf(n, dfs.getOrElse(t, 0L))).toArray, isAnd))
-    }.toArray
-    if (compiled.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double)].toDF("qid", "doc_id", "score")
-    val neededTerms = compiled.flatMap(_._2).distinct.toSeq
-    val bQueries = spark.sparkContext.broadcast(compiled)
-    val tomb = graft.index.Tombstones.handle(indexDir)
-
-    val blocks = IndexBuilder.readPostings(spark, indexDir)
-      .where($"term".isin(neededTerms: _*))
-      .select($"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    val perSlice = blocks.groupByKey(_._1).flatMapGroups { (slice, rows) =>
-      val byTerm = rows.toArray.groupBy(_._2)
-      // block refs are built once per (slice, term) and SHARED across
-      // queries; each query gets fresh cursors over them
-      val refsOf: Map[String, Array[BlockRef]] = byTerm.map { case (t, rs) =>
-        t -> rs.sortBy(r => (r._4, r._3))
-          .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11))
-      }
-      bQueries.value.iterator.flatMap { case (qid, qTerms, qIdfs, isAnd) =>
-        val iters = qTerms.iterator.zipWithIndex.flatMap { case (t, ti) =>
-          refsOf.get(t).map(refs => new PostingIter(ti, qIdfs(ti), refs, avgDl))
-        }.toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          val filter = if (tomb == null) null else tomb.compose(slice, null)
-          val hits =
-            if (isAnd) BlockMaxWand.and(iters, k, filter)
-            else BlockMaxWand.or(iters, k, filter)
-          hits.iterator.map(h => (qid, h.docId, h.score))
-        }
-      }
-    }.toDF("qid", "doc_id", "score")
-
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"qid").orderBy(desc("score"), asc("doc_id"))
-    perSlice.withColumn("rn", row_number().over(w))
-      .where($"rn" <= k)
-      .drop("rn")
-  }
+      boosts: Seq[Double] = null,
+      msmField: String = null
+  ): DataFrame =
+    Walks.topK(PostingSource(spark, indexDir), queryTerms, mode, k, docFilter, attrFilter,
+      mustNot, minShouldMatch, searchAfter, boosts, msmField)
 
   /** ES `_explain`: per-term score decomposition for specific docs —
     * the relevance-debugging surface (why did doc d rank where it did?).
@@ -338,19 +114,15 @@ object Search {
   ): DataFrame = {
     import spark.implicits._
     require(docIds.nonEmpty, "explain needs at least one doc id")
+    val src = PostingSource(spark, indexDir)
     val terms = queryTerms.distinct
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val dfs: Map[String, Long] = IndexBuilder.readTerms(spark, indexDir)
-      .where($"term".isin(terms: _*))
-      .collect().map(t => t.term -> t.doc_freq).toMap
+    val avgDl = src.avgDl
+    val dfs = src.dfOf(terms)
+    val idfs = dfs.map { case (t, df) => t -> src.idf(df) }
     val bIds = spark.sparkContext.broadcast(docIds.toSet)
-    val bDfs = spark.sparkContext.broadcast(dfs)
     val lo = docIds.min
     val hi = docIds.max
-    IndexBuilder.readPostings(spark, indexDir)
-      .where($"term".isin(terms: _*) && $"doc_id_max" >= lo && $"doc_id_min" <= hi)
+    src.blocks(terms, $"doc_id_max" >= lo && $"doc_id_min" <= hi)
       .select($"term", $"count", $"doc_id_min", $"deltas", $"tfs", $"dls")
       .as[(String, Int, Long, Array[Byte], Array[Byte], Array[Byte])]
       .flatMap { case (term, cnt, idMin, deltas, tfs, dls) =>
@@ -359,9 +131,8 @@ object Search {
         lazy val tf = graft.functions.Codec.decodeIntsAuto(tfs, cnt)
         lazy val dl = graft.functions.Codec.decodeIntsAuto(dls, cnt)
         Iterator.range(0, cnt).filter(i => wanted.contains(ids(i))).map { i =>
-          val df = bDfs.value(term)
-          val contrib = NaiveBm25.idf(n, df) * IndexBuilder.impact(tf(i), dl(i), avgDl)
-          (ids(i), term, tf(i).toLong, dl(i).toLong, df, contrib)
+          val contrib = idfs(term) * IndexBuilder.impact(tf(i), dl(i), avgDl)
+          (ids(i), term, tf(i).toLong, dl(i).toLong, dfs(term), contrib)
         }
       }
       .toDF("doc_id", "term", "tf", "doc_len", "doc_freq", "contrib")
@@ -369,12 +140,10 @@ object Search {
 
   /** ES prefix query (`{"prefix": {"text": "..."}}`): expand the prefix
     * against the term dictionary — a RANGE read of the term-sorted
-    * parquet (StringStartsWith pushes to the scan; at 10^12-doc vocab
-    * only the prefix's row groups open) — capped at `maxExpansions` by
-    * descending df then term (ES's top_terms rewrite), then the standard
-    * OR WAND over the expansions. Scoring keeps per-expansion idf (ES
-    * scoring_boolean rewrite — the stronger contract vs constant_score).
-    * The whole bool vocabulary (filter context, mustNot, msm) composes,
+    * parquet (StringStartsWith pushes to the scan) — capped at
+    * `maxExpansions` by descending df then term (ES's top_terms rewrite),
+    * then the standard OR WAND over the expansions with per-expansion idf
+    * (ES scoring_boolean rewrite). The whole bool vocabulary composes,
     * because the rewrite IS a bool query.
     */
   def prefixTopK(
@@ -386,28 +155,14 @@ object Search {
       docFilter: Column = null,
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil
-  ): DataFrame = {
-    import spark.implicits._
-    require(prefix.nonEmpty, "empty prefix")
-    val expansions = IndexBuilder.readTerms(spark, indexDir)
-      .where($"term".startsWith(prefix))
-      .orderBy(desc("doc_freq"), asc("term"))
-      .limit(maxExpansions)
-      .collect().map(_.term).toSeq
-    if (expansions.isEmpty) return spark.emptyDataset[QueryHit].toDF()
-    topK(spark, indexDir, expansions, "or", k, docFilter, attrFilter, mustNot)
-  }
+  ): DataFrame =
+    Walks.rewriteTopK(PostingSource(spark, indexDir), PostingSource.prefix(prefix),
+      maxExpansions, k, docFilter, attrFilter, mustNot)
 
-  /** ES fuzzy query (`{"fuzzy": {"text": "..."}}`): expand to dictionary
-    * terms within `maxEdits` Levenshtein distance, capped at
-    * `maxExpansions` by (df desc, term) — ES's fuzzy rewrite — then the
-    * standard OR WAND with per-expansion idf. The expansion is a
-    * DISTRIBUTED filter over the terms table using the codegen'd
-    * `levenshtein` expression with a length pre-cut (|len−|q|| ≤
-    * maxEdits): the terms table is orders of magnitude smaller than the
-    * postings (ES walks an FST automaton per shard; our dictionary scan
-    * is the column-pruned batch analog and parallelizes with the
-    * cluster).
+  /** ES fuzzy query: expand to dictionary terms within `maxEdits`
+    * Levenshtein distance (a distributed codegen `levenshtein` filter with
+    * a length pre-cut — the terms table is orders of magnitude smaller
+    * than the postings), capped by (df desc, term), then the OR WAND.
     */
   def fuzzyTopK(
       spark: SparkSession,
@@ -419,31 +174,17 @@ object Search {
       docFilter: Column = null,
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil
-  ): DataFrame = {
-    import spark.implicits._
-    require(term.nonEmpty, "empty term")
-    require(maxEdits >= 0 && maxEdits <= 2, "ES caps fuzziness at 2 edits")
-    val expansions = IndexBuilder.readTerms(spark, indexDir)
-      .where(abs(length($"term") - lit(term.length)) <= maxEdits)
-      .where(levenshtein($"term", lit(term)) <= maxEdits)
-      .orderBy(desc("doc_freq"), asc("term"))
-      .limit(maxExpansions)
-      .collect().map(_.term).toSeq
-    if (expansions.isEmpty) return spark.emptyDataset[QueryHit].toDF()
-    topK(spark, indexDir, expansions, "or", k, docFilter, attrFilter, mustNot)
-  }
+  ): DataFrame =
+    Walks.rewriteTopK(PostingSource(spark, indexDir), PostingSource.fuzzy(term, maxEdits),
+      maxExpansions, k, docFilter, attrFilter, mustNot)
 
   /** ES field collapsing (`collapse: {field: …}`): top-k hits with at
     * most ONE hit per value of a declared keyword attr — the "one event
     * per server" view. Exact (unlike a post-filtered top-k, which can
     * starve a group whose best hit ranks below k): each slice scores its
-    * FULL match set ([[BlockMaxWand.scoredMatches]] — collapse semantics
-    * need every group's best, which can rank anywhere) and keeps one
-    * best (score desc, docId asc) hit per value — per-task memory ∝
-    * distinct values (the bounded-cardinality keyword contract), network
-    * = nSlices × |values| rows, independent of match count. Scores are
-    * unchanged BM25 (corpus-global); filter context / must_not /
-    * tombstones / msm compose as everywhere.
+    * FULL match set and keeps one best (score desc, docId asc) hit per
+    * value — per-task memory ∝ distinct values, network = nSlices ×
+    * |values| rows, independent of match count.
     */
   def collapseTopK(
       spark: SparkSession,
@@ -457,16 +198,13 @@ object Search {
       mustNot: Seq[String] = Nil,
       minShouldMatch: Int = 1,
       valueCap: Int = 1 << 20
-  ): DataFrame = {
-    require(docFilter == null, "collapse uses typed filter context (attrFilter)")
-    collapseTopKMulti(spark, Seq(indexDir), queryTerms, mode, kwField, k,
-      attrFilter, mustNot, minShouldMatch, valueCap)
-  }
+  ): DataFrame =
+    Walks.collapseTopK(PostingSource(spark, indexDir), queryTerms, mode, kwField, k,
+      docFilter, attrFilter, mustNot, minShouldMatch, valueCap)
 
   /** [[collapseTopK]] over a SEGMENT FAMILY (streaming ingest serves the
-    * collapsed view directly, no merge): global stats/df (scores equal
-    * the merged index's), family-global ids, one best hit per keyword
-    * value per (segment, slice) task, global winner per value, top-k.
+    * collapsed view directly, no merge): global stats/df, family-global
+    * ids, global winner per value.
     */
   def collapseTopKMulti(
       spark: SparkSession,
@@ -479,180 +217,14 @@ object Search {
       mustNot: Seq[String] = Nil,
       minShouldMatch: Int = 1,
       valueCap: Int = 1 << 20
-  ): DataFrame = {
-    require(valueCap > 0, "valueCap must be positive")
-    import spark.implicits._
-    require(segmentDirs.nonEmpty, "no segments")
-    val terms = queryTerms.distinct
-    val segStats = segmentDirs.map(IndexBuilder.readStats(spark, _))
-    val n = segStats.map(_.n_docs).sum
-    val totTok = segStats.map(_.total_tokens).sum
-    val avgDl = if (n > 0 && totTok > 0) totTok.toDouble / n else 1.0
-    val bases = segStats.map(_.n_docs).scanLeft(0L)(_ + _).init
-    // global df = Σ per-segment (the merged index's df)
-    val dfs: Map[String, Long] = segmentDirs
-      .map(d => IndexBuilder.readTerms(spark, d).where($"term".isin(terms: _*)).toDF())
-      .reduce(_ unionByName _)
-      .groupBy($"term").agg(sum($"doc_freq").as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (terms.isEmpty || (mode == "and" && terms.exists(t => !dfs.contains(t))))
-      return spark.emptyDataset[(String, Long, Double)].toDF(kwField, "doc_id", "score")
-    val present = terms.filter(dfs.contains)
-    if (present.isEmpty || present.size < minShouldMatch)
-      return spark.emptyDataset[(String, Long, Double)].toDF(kwField, "doc_id", "score")
-    val idfs = terms.map(t => NaiveBm25.idf(n, dfs.getOrElse(t, 0L))).toArray
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, idfs, exTerms.toArray))
-    val bDirs = spark.sparkContext.broadcast(segmentDirs.toArray)
-    val bBases = spark.sparkContext.broadcast(bases.toArray)
-    val bTombs = spark.sparkContext.broadcast(
-      segmentDirs.map(graft.index.Tombstones.handle).toArray)
-    val pred = attrFilter
-    val isAnd = mode == "and"
-    val msm = minShouldMatch
-    val fld = kwField
-    val avg = avgDl
-    val single = segmentDirs.size == 1
-    val vCap = valueCap
-
-    val blocks = segmentDirs.zipWithIndex
-      .map { case (d, i) =>
-        IndexBuilder.readPostings(spark, d)
-          .where($"term".isin(terms ++ exTerms: _*))
-          .select(
-            lit(i).as("seg"), $"slice", $"term", $"block_id", $"doc_id_min",
-            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss",
-            $"max_impact", $"max_tf", $"min_dl"
-          )
-      }
-      .reduce(_ unionByName _)
-      .as[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double, Int, Int)]
-
-    val perSlice = blocks
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key, rows) =>
-        val (seg, slice) = key
-        val segDir = bDirs.value(seg)
-        val docBase = bBases.value(seg)
-        val (qTerms, qIdfs, exT) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._3)
-        def itersOf(t: String, ti: Int, idf: Double): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._5, r._4))
-              .map(r => BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11,
-                // single segment: stored exact bound (its own avgdl); family:
-                // avgdl-independent bound at the global avgdl (MultiSearcher's
-                // rule) — bounds are unused by scoredMatches but kept honest
-                if (single) r._12 else IndexBuilder.impact(r._13, r._14, avg)))
-            new PostingIter(ti, idf, refs, avg)
-          }
-        val iters = qTerms.iterator.zipWithIndex
-          .flatMap { case (t, ti) => itersOf(t, ti, qIdfs(ti)) }.toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(segDir, slice, pred)
-          val predCursor = filter
-          val exIters = exT.iterator.flatMap(t => itersOf(t, 0, 0.0)).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          val tomb = bTombs.value(seg)
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          val reader = AttrSidecar.openReader(segDir, slice)
-          val kwIdx = reader.kwIndex(fld)
-          // One best hit per value within the task — a task-local
-          // COMBINER capped at `valueCap` distinct values: beyond the cap
-          // NEW values stream straight through to the global
-          // winner-per-value window (Spark's shuffle spills; task memory
-          // stays ≤ cap entries), existing values keep combining. Results
-          // are identical either way — the downstream window already
-          // picks one global winner per value; the map only shrinks the
-          // exchange from match-count to nSlices×|values| when the
-          // keyword honors its bounded-cardinality contract
-          // (the batch-filter cap treatment, `Searcher.attrAllowListCap`).
-          var closed = false
-          def closeAll(): Unit = if (!closed) {
-            closed = true
-            reader.close()
-            predCursor match {
-              case c: AutoCloseable => c.close()
-              case _ =>
-            }
-          }
-          val tc = org.apache.spark.TaskContext.get()
-          if (tc != null) tc.addTaskCompletionListener[Unit](_ => closeAll())
-          val best = scala.collection.mutable.HashMap.empty[String, (Long, Double)]
-          val streamed = BlockMaxWand.scoredMatches(iters, isAnd, msm, filter)
-            .flatMap { case (id, s) =>
-              if (!reader.seek(id)) Nil
-              else {
-                val v = reader.kwValue(kwIdx)
-                val gid = docBase + id
-                best.get(v) match {
-                  case Some((bid, bs)) =>
-                    if (s > bs || (s == bs && gid < bid)) best.update(v, (gid, s))
-                    Nil
-                  case None =>
-                    if (best.size < vCap) { best.update(v, (gid, s)); Nil }
-                    else (v, gid, s) :: Nil
-                }
-              }
-            }
-          // map drains only AFTER the match stream exhausts (++ is lazy)
-          val drained = streamed ++ new scala.collection.AbstractIterator[(String, Long, Double)] {
-            private var it: Iterator[(String, Long, Double)] = null
-            private def u: Iterator[(String, Long, Double)] = {
-              if (it == null) it = best.iterator.map { case (v, (id, s)) => (v, id, s) }
-              it
-            }
-            def hasNext: Boolean = u.hasNext
-            def next(): (String, Long, Double) = u.next()
-          }
-          new scala.collection.AbstractIterator[(String, Long, Double)] {
-            def hasNext: Boolean = {
-              val h = drained.hasNext
-              if (!h) closeAll()
-              h
-            }
-            def next(): (String, Long, Double) = drained.next()
-          }
-        }
-      }
-      .toDF(fld, "doc_id", "score")
-
-    // global: one winner per value, then top-k groups by their winner
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(fld)).orderBy(desc("score"), asc("doc_id"))
-    perSlice
-      .withColumn("rn", row_number().over(w))
-      .where($"rn" === 1)
-      .drop("rn")
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
-  }
+  ): DataFrame =
+    Walks.collapseTopK(new PostingSource(spark, segmentDirs), queryTerms, mode, kwField, k,
+      null, attrFilter, mustNot, minShouldMatch, valueCap)
 
   /** ES wildcard query (`{"wildcard": {"text": "s?a*"}}`): `*` = any run,
-    * `?` = one char, anything else literal. Compiles to an anchored regex
-    * and rides [[regexpTopK]]'s dictionary expansion; a literal prefix
-    * before the first wildcard becomes a parquet `StringStartsWith`
-    * pre-cut so the dictionary scan stays a range read (a LEADING
-    * wildcard scans the full terms table — orders smaller than postings,
-    * but worth knowing, exactly as in ES).
+    * `?` = one char, anything else literal; rides the regexp expansion
+    * with the literal prefix as a pushdown pre-cut.
     */
-  /** `*`/`?` wildcard → (anchored Java regex, literal-prefix pre-cut) —
-    * shared by the single-index and fielded wildcard rewrites.
-    */
-  private[query] def wildcardToRegex(pattern: String): (String, String) = {
-    require(pattern.nonEmpty, "empty wildcard pattern")
-    val sb = new StringBuilder
-    pattern.foreach {
-      case '*' => sb.append(".*")
-      case '?' => sb.append('.')
-      case c   => sb.append(java.util.regex.Pattern.quote(c.toString))
-    }
-    (sb.toString(), pattern.takeWhile(c => c != '*' && c != '?'))
-  }
-
   def wildcardTopK(
       spark: SparkSession,
       indexDir: String,
@@ -662,19 +234,13 @@ object Search {
       docFilter: Column = null,
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil
-  ): DataFrame = {
-    val (regex, prefix) = wildcardToRegex(pattern)
-    regexpTopK(spark, indexDir, regex, k, maxExpansions,
-      docFilter, attrFilter, mustNot, prefixHint = prefix)
-  }
+  ): DataFrame =
+    Walks.rewriteTopK(PostingSource(spark, indexDir), PostingSource.wildcard(pattern),
+      maxExpansions, k, docFilter, attrFilter, mustNot)
 
   /** ES regexp query: expand the ANCHORED regex (Java syntax) against the
-    * term dictionary — a distributed column-pruned scan with the codegen
-    * `rlike` expression, `prefixHint` as a pushdown range pre-cut — then
-    * the standard OR WAND over the ≤ `maxExpansions` rewrites (df-desc
-    * cap, per-expansion idf: scoring_boolean, the same contract as
-    * prefix/fuzzy). The whole bool vocabulary composes because the
-    * rewrite IS a bool query.
+    * term dictionary (codegen `rlike`, `prefixHint` as a pushdown range
+    * pre-cut), then the OR WAND over the ≤ `maxExpansions` rewrites.
     */
   def regexpTopK(
       spark: SparkSession,
@@ -686,19 +252,9 @@ object Search {
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil,
       prefixHint: String = ""
-  ): DataFrame = {
-    import spark.implicits._
-    require(regex.nonEmpty, "empty regex")
-    val base = IndexBuilder.readTerms(spark, indexDir)
-    val cut = if (prefixHint.isEmpty) base else base.where($"term".startsWith(prefixHint))
-    val expansions = cut
-      .where($"term".rlike(s"^(?:$regex)$$"))
-      .orderBy(desc("doc_freq"), asc("term"))
-      .limit(maxExpansions)
-      .collect().map(_.term).toSeq
-    if (expansions.isEmpty) return spark.emptyDataset[QueryHit].toDF()
-    topK(spark, indexDir, expansions, "or", k, docFilter, attrFilter, mustNot)
-  }
+  ): DataFrame =
+    Walks.rewriteTopK(PostingSource(spark, indexDir), PostingSource.regexp(regex, prefixHint),
+      maxExpansions, k, docFilter, attrFilter, mustNot)
 
   /** ES term suggester ("did you mean") — the SEARCH-AS-YOU-TYPE side of
     * the reference's Kibana surface: candidate corrections for a (likely
@@ -717,12 +273,9 @@ object Search {
       maxEdits: Int = 1
   ): DataFrame = {
     import spark.implicits._
-    require(term.nonEmpty, "empty term")
     require(maxEdits >= 1 && maxEdits <= 2, "ES caps suggester fuzziness at 2 edits")
     IndexBuilder.readTerms(spark, indexDir)
-      .where(abs(length($"term") - lit(term.length)) <= maxEdits)
-      .where($"term" =!= term)
-      .where(levenshtein($"term", lit(term)) <= maxEdits)
+      .where(PostingSource.fuzzy(term, maxEdits) && $"term" =!= term)
       .orderBy(desc("doc_freq"), asc("term"))
       .limit(size)
       .select($"term".as("suggestion"), $"doc_freq")
@@ -760,20 +313,17 @@ object Search {
       .groupBy(identity).map { case (t, occ) => t -> occ.size }
     val cand = tf.filter(_._2 >= minTermFreq).keys.toSeq.sorted
     if (cand.isEmpty) return spark.emptyDataset[QueryHit].toDF()
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val dfs: Map[String, Long] = IndexBuilder
-      .readTerms(spark, indexDir)
-      .where($"term".isin(cand: _*))
-      .collect().map(t => t.term -> t.doc_freq).toMap
+    // one source for selection AND retrieval: the walk reuses the memo
+    val src = PostingSource(spark, indexDir)
+    val dfs = src.dfOf(cand)
     val selected = cand
       .filter(t => dfs.getOrElse(t, 0L) >= minDocFreq)
-      .map(t => (t, tf(t) * NaiveBm25.idf(stats.n_docs, dfs(t))))
+      .map(t => (t, tf(t) * src.idf(dfs(t))))
       .sortBy { case (t, s) => (-s, t) }
       .take(maxQueryTerms)
       .map(_._1)
     if (selected.isEmpty) return spark.emptyDataset[QueryHit].toDF()
-    topK(spark, indexDir, selected, "or", k + 1, attrFilter = attrFilter,
-      mustNot = mustNot)
+    Walks.topK(src, selected, "or", k + 1, attrFilter = attrFilter, mustNot = mustNot)
       .where($"doc_id" =!= docId)
       .limit(k)
   }
@@ -801,10 +351,10 @@ object Search {
     hits.join(broadcast(docs), Seq("doc_id"), "left")
   }
 
-  /** Exact-phrase top-k (ES `match_phrase`); see BlockMaxWand.phrase for
-    * the scoring contract. Same scale shape as topK: pushdown on the ≤
-    * few distinct terms, one shuffle of matched blocks (+ filter ids) by
-    * slice, per-slice leapfrog+positional verify, nSlices·k global merge.
+  /** Exact-phrase top-k (ES `match_phrase`; `slop` > 0 = sloppy phrase);
+    * see BlockMaxWand.phrase for the scoring contract. Same scale shape
+    * as topK: pushdown on the ≤ few distinct terms, one shuffle of
+    * matched blocks by slice, per-slice leapfrog + positional verify.
     */
   def phraseTopK(
       spark: SparkSession,
@@ -815,202 +365,21 @@ object Search {
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil,
       slop: Int = 0
-  ): DataFrame = {
-    import spark.implicits._
-    require(phraseTerms.nonEmpty, "empty phrase")
-    require(slop >= 0, "negative slop")
-    require(docFilter == null || attrFilter == null,
-      "pass docFilter (ad-hoc Column) or attrFilter (typed sidecar predicate), not both")
-    val distinctTerms = phraseTerms.distinct // first-occurrence order
-    val offsets: Array[Array[Int]] = distinctTerms.map { t =>
-      phraseTerms.zipWithIndex.collect { case (pt, i) if pt == t => i }.toArray
-    }.toArray
-    // phrase position j → distinct-term index (slop > 0 path)
-    val chain: Array[Int] = phraseTerms.map(distinctTerms.indexOf).toArray
-
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val dfs: Map[String, Long] = IndexBuilder
-      .readTerms(spark, indexDir)
-      .where($"term".isin(distinctTerms: _*))
-      .collect()
-      .map(t => t.term -> t.doc_freq)
-      .toMap
-    if (distinctTerms.exists(t => !dfs.contains(t)))
-      return spark.emptyDataset[QueryHit].toDF()
-    // idf summed over every phrase POSITION (duplicate terms count per
-    // occurrence — Lucene PhraseQuery shape; oracle mirrors)
-    val idfSum = phraseTerms.map(t => NaiveBm25.idf(n, dfs(t))).sum
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast(
-      (distinctTerms.toArray, offsets, idfSum, exTerms.toArray, chain, slop))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-
-    val blocks = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(distinctTerms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-      )
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    def run(
-        slice: Int,
-        rows: Iterator[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)],
-        base: DocFilter
-    ): Iterator[QueryHit] = {
-      val (qTerms, offs, idfS, exT, chn, slp) = bCtx.value
-      val byTerm = rows.toArray.groupBy(_._2)
-      def refsOf(t: String) = byTerm(t)
-        .sortBy(r => (r._4, r._3))
-        .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11))
-      var filter = base
-      val exIters = exT.iterator.filter(byTerm.contains)
-        .map(t => new PostingIter(0, 0.0, refsOf(t), avgDl)).toArray
-      if (exIters.nonEmpty)
-        filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-      if (tomb != null) filter = tomb.compose(slice, filter)
-      if (!qTerms.forall(byTerm.contains)) return Iterator.empty
-      val iters = qTerms.map(t =>
-        new PostingIter(0, 0.0, refsOf(t), avgDl)) // idf unused in phrase scoring
-      val hits =
-        if (slp == 0) BlockMaxWand.phrase(iters, offs, idfS, k, filter)
-        else BlockMaxWand.phraseSlop(iters, chn, slp, idfS, k, filter)
-      hits.iterator.map(h => QueryHit(h.docId, h.score))
-    }
-
-    val localTopK =
-      if (docFilter == null && attrFilter == null)
-        blocks.groupByKey(_._1).flatMapGroups { (slice, rows) => run(slice, rows, null) }
-      else if (attrFilter != null) {
-        val idxDir = indexDir
-        val pred = attrFilter
-        blocks.groupByKey(_._1).flatMapGroups { (slice, rows) =>
-          val cur = AttrSidecar.openCursor(idxDir, slice, pred)
-          try run(slice, rows, cur)
-          finally cur.close()
-        }
-      } else {
-        val filterIds = spark.read.parquet(s"$indexDir/docs")
-          .where(docFilter)
-          .select($"slice".cast("int"), $"doc_id")
-          .as[(Int, Long)]
-        blocks
-          .groupByKey(_._1)
-          .cogroup(filterIds.groupByKey(_._1)) { (slice, rows, fids) =>
-            val allow = fids.map(_._2).toArray
-            if (allow.isEmpty) Iterator.empty
-            else {
-              java.util.Arrays.sort(allow)
-              run(slice, rows, new FilterIter(allow))
-            }
-          }
-      }
-
-    localTopK
-      .toDF()
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
-  }
+  ): DataFrame =
+    Walks.phraseTopK(PostingSource(spark, indexDir), phraseTerms, k, docFilter, attrFilter,
+      mustNot, slop)
 
   /** Corpus-wide exact-phrase occurrence count (Σ over docs of the
-    * per-doc phrase freq) — the bigram-count primitive under
-    * [[phraseSuggest]]'s language model. Same block machinery as
-    * [[phraseTopK]] (pushdown to the phrase terms' blocks, per-slice
-    * positional verify), but the reduction is ONE long per slice.
-    * Tombstoned docs are excluded (their occurrences must not steer the
-    * LM toward deleted text).
+    * per-doc phrase freq, tombstoned docs excluded) — the bigram-count
+    * primitive under [[phraseSuggest]]'s language model.
     */
   def phraseCount(
       spark: SparkSession,
       indexDir: String,
       phraseTerms: Seq[String]
   ): Long = {
-    import spark.implicits._
     require(phraseTerms.nonEmpty, "empty phrase")
-    val distinctTerms = phraseTerms.distinct
-    val offsets: Array[Array[Int]] = distinctTerms.map { t =>
-      phraseTerms.zipWithIndex.collect { case (pt, i) if pt == t => i }.toArray
-    }.toArray
-    val bCtx = spark.sparkContext.broadcast((distinctTerms.toArray, offsets))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val counts = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(distinctTerms: _*))
-      .select($"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-      .groupByKey(_._1)
-      .mapGroups { (slice, rows) =>
-        val (qTerms, offs) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._2)
-        if (!qTerms.forall(byTerm.contains)) 0L
-        else {
-          val iters = qTerms.map { t =>
-            val refs = byTerm(t).sortBy(r => (r._4, r._3))
-              .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, 0.0))
-            new PostingIter(0, 0.0, refs, 1.0)
-          }
-          val filter = if (tomb == null) null else tomb.compose(slice, null)
-          BlockMaxWand.phraseMatches(iters, offs, filter)
-            .map(_._2.toLong).sum
-        }
-      }
-    val row = counts.agg(sum("value")).head()
-    if (row.isNullAt(0)) 0L else row.getLong(0)
-  }
-
-  /** Batched [[phraseCount]] for a SET of bigrams in ONE job: one scan
-    * over the union of all pair terms' blocks, one per-slice task that
-    * runs every pair's positional walk against the slice's decoded refs
-    * (refs shared across pairs; cursors fresh per pair). Replaces the
-    * one-driver-job-per-bigram loop the phrase suggester used to run —
-    * O(candidates) sequential jobs became one (r6 opt round; guide §2.6).
-    */
-  def phraseCountBatch(
-      spark: SparkSession,
-      indexDir: String,
-      pairs: Seq[(String, String)]
-  ): Map[(String, String), Long] = {
-    import spark.implicits._
-    if (pairs.isEmpty) return Map.empty
-    val distinctPairs = pairs.distinct.toArray
-    val allTerms = distinctPairs.flatMap(p => Seq(p._1, p._2)).distinct.toSeq
-    val bPairs = spark.sparkContext.broadcast(distinctPairs)
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val perSlice = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(allTerms: _*))
-      .select($"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-      .groupByKey(_._1)
-      .flatMapGroups { (slice, rows) =>
-        val prs = bPairs.value
-        val byTerm = rows.toArray.groupBy(_._2)
-        val refsCache = scala.collection.mutable.AnyRefMap.empty[String, Array[BlockRef]]
-        def refsOf(t: String) = refsCache.getOrElseUpdate(t, byTerm(t)
-          .sortBy(r => (r._4, r._3))
-          .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, 0.0)))
-        prs.iterator.zipWithIndex
-          .filter { case ((a, b), _) => byTerm.contains(a) && byTerm.contains(b) }
-          .map { case ((a, b), pi) =>
-            // duplicate-term bigram (a a): one iter, both offsets — the
-            // exact distinctTerms/offsets shape phraseCount derives
-            val (qTerms, offs) =
-              if (a == b) (Array(a), Array(Array(0, 1)))
-              else (Array(a, b), Array(Array(0), Array(1)))
-            val iters = qTerms.map(t => new PostingIter(0, 0.0, refsOf(t), 1.0))
-            val filter = if (tomb == null) null else tomb.compose(slice, null)
-            (pi, BlockMaxWand.phraseMatches(iters, offs, filter).map(_._2.toLong).sum)
-          }
-      }
-      .collect()
-    val sums = new Array[Long](distinctPairs.length)
-    perSlice.foreach { case (pi, c) => sums(pi) += c }
-    distinctPairs.indices.map(i => distinctPairs(i) -> sums(i)).toMap
+    Walks.phraseCounts(PostingSource(spark, indexDir), Seq(phraseTerms)).head
   }
 
   /** ES `phrase` suggester ("did you mean") over the index's own
@@ -1027,10 +396,10 @@ object Search {
     *             = backoff · ttf(b) / T      otherwise
     *
     * Bigram counts are positional [[phraseCount]] walks over ONLY the
-    * candidate pairs' postings — no corpus scan, no forward index; the
-    * combination space is |positions|·perTermCandidates phrases, never
-    * a cross product. Returns (suggestion, score_e6) top `size`, the
-    * input itself excluded.
+    * candidate pairs' postings, all pairs in one job — no corpus scan,
+    * no forward index; the combination space is
+    * |positions|·perTermCandidates phrases, never a cross product.
+    * Returns (suggestion, score_e6) top `size`, the input itself excluded.
     */
   def phraseSuggest(
       spark: SparkSession,
@@ -1046,23 +415,17 @@ object Search {
     require(maxEdits >= 1 && maxEdits <= 2, "ES caps suggester fuzziness at 2 edits")
     val stats = IndexBuilder.readStats(spark, indexDir)
     val bigT = stats.total_tokens.toDouble
-    // one dictionary pass: per-position edit-distance candidates (df-desc
-    // top-N each) + the input terms' own stats
     val dict = IndexBuilder.readTerms(spark, indexDir)
     val ttfOf = scala.collection.mutable.HashMap.empty[String, Long]
     // ONE dictionary job: the input terms' stats (pos = -1) and every
-    // position's edit-distance candidates ride one unioned plan — the
-    // per-position loop ran a separate full-dictionary scan job per
-    // phrase position (r6 opt round; guide §2.6: batch driver-sequenced
-    // lookups into one job)
+    // position's edit-distance candidates (df-desc top-N each) ride one
+    // unioned plan
     val inputBranch = dict
       .where($"term".isin(phraseTerms.distinct: _*))
       .select(lit(-1).as("pos"), $"term", $"doc_freq", $"total_tf")
     val candBranches = phraseTerms.zipWithIndex.map { case (q, i) =>
       dict
-        .where(abs(length($"term") - lit(q.length)) <= maxEdits)
-        .where($"term" =!= q)
-        .where(levenshtein($"term", lit(q)) <= maxEdits)
+        .where(PostingSource.fuzzy(q, maxEdits) && $"term" =!= q)
         .orderBy(desc("doc_freq"), asc("term"))
         .limit(perTermCandidates)
         .select(lit(i).as("pos"), $"term", $"doc_freq", $"total_tf")
@@ -1084,7 +447,8 @@ object Search {
     if (phrases.isEmpty)
       return spark.emptyDataset[(String, Long)].toDF("suggestion", "score_e6")
     val bigrams = phrases.flatMap(_.sliding(2).map(w => (w(0), w(1)))).distinct
-    val bcount: Map[(String, String), Long] = phraseCountBatch(spark, indexDir, bigrams)
+    val bcount: Map[(String, String), Long] = bigrams.zip(
+      Walks.phraseCounts(PostingSource(spark, indexDir), bigrams.map { case (a, b) => Seq(a, b) })).toMap
     def lp(t: String): Double = math.log(ttfOf(t).toDouble / bigT)
     def lpb(a: String, b: String): Double = {
       val c = bcount((a, b))
@@ -1106,13 +470,10 @@ object Search {
     * the search-as-you-type query. Lucene rewrites it to a
     * MultiPhraseQuery over the first `maxExpansions` dictionary terms in
     * TERM ORDER (alphabetical — not df order like `prefix`'s rewrite);
-    * we run one [[phraseTopK]] per expansion and keep each doc's BEST
-    * expansion score (the deterministic, oracle-exact reading of ES's
-    * blended multi-phrase scoring). Expansion count is capped, every
-    * per-expansion walk is block-max gated, and the merge is a k-row
-    * union per expansion — the non-last terms' postings are re-walked
-    * per expansion, the documented cost of composing instead of teaching
-    * WAND multi-term positions.
+    * each doc keeps its BEST expansion score (the deterministic,
+    * oracle-exact reading of ES's blended multi-phrase scoring). One
+    * dictionary job, one scan, one exchange; the non-last terms'
+    * postings are re-walked per expansion.
     */
   def phrasePrefixTopK(
       spark: SparkSession,
@@ -1123,143 +484,14 @@ object Search {
       docFilter: Column = null,
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil
-  ): DataFrame = {
-    import spark.implicits._
-    require(phraseTerms.nonEmpty, "empty phrase")
-    require(maxExpansions >= 1, "maxExpansions must be positive")
-    require(docFilter == null || attrFilter == null,
-      "pass docFilter (ad-hoc Column) or attrFilter (typed sidecar predicate), not both")
-    val last = phraseTerms.last
-    // ONE dictionary job: the expansion rows already carry doc_freq, so
-    // no per-expansion df lookup is needed (the per-expansion phraseTopK
-    // composition ran one driver collect AND one scan+shuffle per
-    // expansion — 8 dictionary jobs and 8 exchanges for the default cap;
-    // r6 opt round, guide §2.4: this shape is one scan, one exchange).
-    val expRows = IndexBuilder.readTerms(spark, indexDir)
-      .where($"term".startsWith(last))
-      .orderBy(asc("term"))
-      .limit(maxExpansions)
-      .collect()
-    if (expRows.isEmpty) return spark.emptyDataset[QueryHit].toDF()
-    val initTerms = phraseTerms.init.distinct
-    val initDfs: Map[String, Long] =
-      if (initTerms.isEmpty) Map.empty
-      else IndexBuilder.readTerms(spark, indexDir)
-        .where($"term".isin(initTerms: _*))
-        .collect()
-        .map(t => t.term -> t.doc_freq)
-        .toMap
-    // a missing non-last term empties every expansion
-    if (initTerms.exists(t => !initDfs.contains(t)))
-      return spark.emptyDataset[QueryHit].toDF()
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val dfAll: Map[String, Long] = initDfs ++ expRows.map(t => t.term -> t.doc_freq)
-    // per-expansion walk context: distinct terms in first-occurrence
-    // order, per-term position offsets, positional idf sum — exactly the
-    // values phraseTopK derives for (init :+ expansion)
-    val expCtx: Array[(Array[String], Array[Array[Int]], Double)] = expRows.map { er =>
-      val terms = phraseTerms.init :+ er.term
-      val distinctTerms = terms.distinct
-      val offsets: Array[Array[Int]] = distinctTerms.map { t =>
-        terms.zipWithIndex.collect { case (pt, i) if pt == t => i }.toArray
-      }.toArray
-      val idfSum = terms.map(t => NaiveBm25.idf(n, dfAll(t))).sum
-      (distinctTerms.toArray, offsets, idfSum)
-    }
-    val allTerms = (phraseTerms.init ++ expRows.map(_.term)).distinct
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast((expCtx, exTerms.toArray))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-
-    val blocks = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(allTerms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-      )
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    // baseFilter must yield a FRESH DocFilter per expansion: filters are
-    // forward-only cursors and each expansion is an independent walk.
-    def run(
-        slice: Int,
-        rows: Iterator[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)],
-        baseFilter: () => DocFilter
-    ): Iterator[QueryHit] = {
-      val (ctxs, exT) = bCtx.value
-      val byTerm = rows.toArray.groupBy(_._2)
-      val refsCache = scala.collection.mutable.AnyRefMap.empty[String, Array[BlockRef]]
-      def refsOf(t: String) = refsCache.getOrElseUpdate(t, byTerm(t)
-        .sortBy(r => (r._4, r._3))
-        .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11)))
-      ctxs.iterator.flatMap { case (qTerms, offs, idfS) =>
-        if (!qTerms.forall(byTerm.contains)) Iterator.empty
-        else {
-          var filter = baseFilter()
-          val exIters = exT.iterator.filter(byTerm.contains)
-            .map(t => new PostingIter(0, 0.0, refsOf(t), avgDl)).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          val iters = qTerms.map(t => new PostingIter(0, 0.0, refsOf(t), avgDl))
-          BlockMaxWand.phrase(iters, offs, idfS, k, filter)
-            .iterator.map(h => QueryHit(h.docId, h.score))
-        }
-      }
-    }
-
-    val localTopK =
-      if (docFilter == null && attrFilter == null)
-        blocks.groupByKey(_._1).flatMapGroups { (slice, rows) => run(slice, rows, () => null) }
-      else if (attrFilter != null) {
-        val idxDir = indexDir
-        val pred = attrFilter
-        blocks.groupByKey(_._1).flatMapGroups { (slice, rows) =>
-          // one sidecar read per slice; fresh cursor per expansion walk
-          val cursors = scala.collection.mutable.ArrayBuffer.empty[AutoCloseable]
-          val out = run(slice, rows, () => {
-            val cur = AttrSidecar.openCursor(idxDir, slice, pred)
-            cursors += cur
-            cur
-          }).toArray
-          cursors.foreach(_.close())
-          out.iterator
-        }
-      } else {
-        val filterIds = spark.read.parquet(s"$indexDir/docs")
-          .where(docFilter)
-          .select($"slice".cast("int"), $"doc_id")
-          .as[(Int, Long)]
-        blocks
-          .groupByKey(_._1)
-          .cogroup(filterIds.groupByKey(_._1)) { (slice, rows, fids) =>
-            val allow = fids.map(_._2).toArray
-            if (allow.isEmpty) Iterator.empty
-            else {
-              java.util.Arrays.sort(allow)
-              run(slice, rows, () => new FilterIter(allow))
-            }
-          }
-      }
-
-    localTopK
-      .toDF()
-      .groupBy($"doc_id")
-      .agg(max($"score").as("score"))
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
-  }
+  ): DataFrame =
+    Walks.phrasePrefixTopK(PostingSource(spark, indexDir), phraseTerms, k, maxExpansions,
+      docFilter, attrFilter, mustNot)
 
   /** ES `dis_max` over term queries: score = best sub-score +
     * tieBreaker · (sum of the others) — "take the best field/term, don't
     * reward redundancy" (tieBreaker 0 = pure max; 1 ≡ bool.should sum).
-    * Candidates = docs matching ANY term. Document-at-a-time walk with
-    * per-slice k-heaps (like [[synonymTopK]]: a max-combiner has no
-    * per-term additive bound, so no block-max gate; decode stays
-    * on-demand); filter context / must_not / tombstones compose.
+    * Candidates = docs matching ANY term; per-slice k-heaps.
     */
   def disMaxTopK(
       spark: SparkSession,
@@ -1269,123 +501,14 @@ object Search {
       tieBreaker: Double = 0.0,
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil
-  ): DataFrame = {
-    import spark.implicits._
-    require(tieBreaker >= 0.0 && tieBreaker <= 1.0, "tie_breaker in [0,1]")
-    val terms = queryTerms.distinct
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val dfs: Map[String, Long] = IndexBuilder
-      .readTerms(spark, indexDir)
-      .where($"term".isin(terms: _*))
-      .collect()
-      .map(t => t.term -> t.doc_freq)
-      .toMap
-    val present = terms.filter(dfs.contains)
-    if (present.isEmpty) return spark.emptyDataset[QueryHit].toDF()
-    val idfs: Array[Double] = terms.map(t => NaiveBm25.idf(n, dfs.getOrElse(t, 0L))).toArray
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, idfs, exTerms.toArray))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val idxDir = indexDir
-    val pred = attrFilter
-    val tb = tieBreaker
-    val kk = k
-
-    val blocks = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(terms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-      )
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    blocks.groupByKey(_._1).flatMapGroups { (slice, rows) =>
-      val (qTerms, qIdfs, exT) = bCtx.value
-      val byTerm = rows.toArray.groupBy(_._2)
-      def iterOf(t: String, idf: Double): Option[PostingIter] =
-        byTerm.get(t).map { rs =>
-          val refs = rs.sortBy(r => (r._4, r._3))
-            .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11))
-          new PostingIter(0, idf, refs, avgDl)
-        }
-      val iters = qTerms.iterator.zipWithIndex
-        .flatMap { case (t, ti) => iterOf(t, qIdfs(ti)) }.toArray
-      if (iters.isEmpty) Iterator.empty
-      else {
-        var filter: DocFilter =
-          if (pred == null) null else AttrSidecar.openCursor(idxDir, slice, pred)
-        val predCursor = filter
-        val exIters = exT.iterator.flatMap(iterOf(_, 0.0)).toArray
-        if (exIters.nonEmpty)
-          filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-        if (tomb != null) filter = tomb.compose(slice, filter)
-        val top = new BlockMaxWand.TopK(kk)
-        try {
-          var continue = iters.exists(!_.exhausted)
-          while (continue) {
-            var d = Long.MaxValue
-            var i = 0
-            while (i < iters.length) {
-              val it = iters(i)
-              if (!it.exhausted && it.doc < d) d = it.doc
-              i += 1
-            }
-            if (d == Long.MaxValue) continue = false
-            else {
-              if (filter == null || filter.contains(d)) {
-                var best = 0.0
-                var total = 0.0
-                i = 0
-                while (i < iters.length) {
-                  val it = iters(i)
-                  if (!it.exhausted && it.doc == d) {
-                    val s = it.score // idf · impact (idf carried per iter)
-                    total += s
-                    if (s > best) best = s
-                  }
-                  i += 1
-                }
-                top.offer(BlockMaxWand.Hit(d, best + tb * (total - best)))
-              }
-              i = 0
-              while (i < iters.length) {
-                val it = iters(i)
-                if (!it.exhausted && it.doc == d) it.next()
-                i += 1
-              }
-            }
-          }
-          top.result.iterator.map(h => QueryHit(h.docId, h.score))
-        } finally {
-          predCursor match {
-            case c: AutoCloseable => c.close()
-            case _ =>
-          }
-        }
-      }
-    }
-      .toDF()
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
-  }
+  ): DataFrame =
+    Walks.disMaxTopK(PostingSource(spark, indexDir), queryTerms, k, tieBreaker, attrFilter, mustNot)
 
   /** ES scroll / point-in-time EXPORT: the query's FULL match set as a
     * distributed DataFrame (doc_id, score) — no top-k, no driver
     * materialization; the 10^9-row result of a selective query at
-    * 10^12 docs streams straight to the caller's sink (the
-    * feed-the-training-pipeline read ES serves with scroll batches).
-    * Per-slice [[BlockMaxWand.scoredMatches]] walk (scores exact BM25,
-    * block-decode-on-demand); output stays partitioned by slice until
-    * the caller repartitions/writes. filter/must_not/tombstones/msm
-    * compose as everywhere.
-    */
-  /** `knownDfs`: caller-supplied doc_freq map for `queryTerms` (present
-    * terms only) — skips this call's dictionary job. The query_string
-    * tree evaluator resolves a Q-leaf query with ONE batched dictionary
-    * lookup instead of Q sequential jobs (r6 opt round; guide §2.6).
+    * 10^12 docs streams straight to the caller's sink. Output stays
+    * partitioned by slice until the caller repartitions/writes.
     */
   def exportMatches(
       spark: SparkSession,
@@ -1394,91 +517,10 @@ object Search {
       mode: String,
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil,
-      minShouldMatch: Int = 1,
-      knownDfs: Map[String, Long] = null
-  ): DataFrame = {
-    import spark.implicits._
-    val terms = queryTerms.distinct
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val dfs: Map[String, Long] =
-      if (knownDfs != null) knownDfs
-      else IndexBuilder
-        .readTerms(spark, indexDir)
-        .where($"term".isin(terms: _*))
-        .collect()
-        .map(t => t.term -> t.doc_freq)
-        .toMap
-    val isAnd = mode == "and"
-    if (isAnd && terms.exists(t => !dfs.contains(t)))
-      return spark.emptyDataset[QueryHit].toDF()
-    val present = terms.filter(dfs.contains)
-    if (present.isEmpty || present.size < minShouldMatch)
-      return spark.emptyDataset[QueryHit].toDF()
-    val idfs: Array[Double] = terms.map(t => NaiveBm25.idf(n, dfs.getOrElse(t, 0L))).toArray
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, idfs, exTerms.toArray))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val idxDir = indexDir
-    val pred = attrFilter
-    val msm = minShouldMatch
-
-    val blocks = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(terms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-      )
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    blocks.groupByKey(_._1).flatMapGroups { (slice, rows) =>
-      val (qTerms, qIdfs, exT) = bCtx.value
-      val byTerm = rows.toArray.groupBy(_._2)
-      def iterOf(t: String, ti: Int, idf: Double): Option[PostingIter] =
-        byTerm.get(t).map { rs =>
-          val refs = rs.sortBy(r => (r._4, r._3))
-            .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11))
-          new PostingIter(ti, idf, refs, avgDl)
-        }
-      val iters = qTerms.iterator.zipWithIndex
-        .flatMap { case (t, ti) => iterOf(t, ti, qIdfs(ti)) }.toArray
-      if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-      else {
-        var filter: DocFilter =
-          if (pred == null) null else AttrSidecar.openCursor(idxDir, slice, pred)
-        val predCursor = filter
-        val exIters = exT.iterator.flatMap(t => iterOf(t, 0, 0.0)).toArray
-        if (exIters.nonEmpty)
-          filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-        if (tomb != null) filter = tomb.compose(slice, filter)
-        // STREAM the walk (never buffer a slice's match set — it can be
-        // 10^8 rows on a hot term); the sidecar cursor closes when the
-        // consumer exhausts the iterator
-        val base = BlockMaxWand.scoredMatches(iters, isAnd, msm, filter)
-        var closed = false
-        def closeOnce(): Unit = if (!closed) {
-          closed = true
-          predCursor match {
-            case c: AutoCloseable => c.close()
-            case _ =>
-          }
-        }
-        new scala.collection.AbstractIterator[QueryHit] {
-          def hasNext: Boolean = {
-            val h = base.hasNext
-            if (!h) closeOnce()
-            h
-          }
-          def next(): QueryHit = {
-            val (id, s) = base.next()
-            QueryHit(id, s)
-          }
-        }
-      }
-    }.toDF()
-  }
+      minShouldMatch: Int = 1
+  ): DataFrame =
+    Walks.exportMatches(PostingSource(spark, indexDir), queryTerms, mode, attrFilter, mustNot,
+      minShouldMatch)
 
   /** Query-time synonyms (ES `synonym_graph` at search time): each query
     * position is a GROUP of interchangeable terms, scored as ONE term —
@@ -1486,13 +528,8 @@ object Search {
     * df (not the union size — members co-occur), one idf·impact per
     * group. This is NOT OR-expansion (which would double-count a doc
     * containing two spellings and inflate idf of rare variants).
-    *
-    * Walk: document-at-a-time over per-member iterators grouped by
-    * position; per slice a k-sized heap, merge = nSlices·k rows. No
-    * block-max gate — a group's bound would need blended block maxima
-    * across members; the walk is still block-decode-on-demand and
-    * filter/tombstone/msm compose as everywhere. `minShouldMatch` counts
-    * matched GROUPS (ES: each group is one bool.should clause).
+    * `minShouldMatch` counts matched GROUPS (ES: each group is one
+    * bool.should clause).
     */
   def synonymTopK(
       spark: SparkSession,
@@ -1503,122 +540,7 @@ object Search {
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil,
       minShouldMatch: Int = 1
-  ): DataFrame = {
-    import spark.implicits._
-    require(groups.nonEmpty && groups.forall(_.nonEmpty), "empty synonym group")
-    val gs = groups.map(_.distinct)
-    val allTerms = gs.flatten.distinct
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val dfs: Map[String, Long] = IndexBuilder
-      .readTerms(spark, indexDir)
-      .where($"term".isin(allTerms: _*))
-      .collect()
-      .map(t => t.term -> t.doc_freq)
-      .toMap
-    val isAnd = mode == "and"
-    // a group is PRESENT if any member is; AND needs every group present
-    val present = gs.map(_.exists(dfs.contains))
-    if ((isAnd && !present.forall(identity)) || present.count(identity) < minShouldMatch)
-      return spark.emptyDataset[QueryHit].toDF()
-    // SynonymQuery idf: max member df (members co-occur; union would
-    // overstate rarity of the group)
-    val gIdfs: Array[Double] =
-      gs.map(g => NaiveBm25.idf(n, g.map(dfs.getOrElse(_, 0L)).max)).toArray
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast(
-      (gs.map(_.toArray).toArray, gIdfs, exTerms.toArray))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val msm = minShouldMatch
-    val idxDir = indexDir
-    val pred = attrFilter
-    val kk = k
-
-    val blocks = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(allTerms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-      )
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    blocks.groupByKey(_._1).flatMapGroups { (slice, rows) =>
-      val (qGroups, idfs, exT) = bCtx.value
-      val byTerm = rows.toArray.groupBy(_._2)
-      def iterOf(t: String): Option[PostingIter] =
-        byTerm.get(t).map { rs =>
-          val refs = rs.sortBy(r => (r._4, r._3))
-            .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11))
-          new PostingIter(0, 0.0, refs, avgDl)
-        }
-      val members: Array[Array[PostingIter]] = qGroups.map(_.flatMap(iterOf))
-      if (members.forall(_.isEmpty) || (isAnd && members.exists(_.isEmpty)))
-        Iterator.empty
-      else {
-        var filter: DocFilter =
-          if (pred == null) null else AttrSidecar.openCursor(idxDir, slice, pred)
-        val predCursor = filter
-        val exIters = exT.iterator.flatMap(iterOf).toArray
-        if (exIters.nonEmpty)
-          filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-        if (tomb != null) filter = tomb.compose(slice, filter)
-        val top = new BlockMaxWand.TopK(kk)
-        val all = members.flatten
-        try {
-          var continue = all.exists(!_.exhausted)
-          while (continue) {
-            var d = Long.MaxValue
-            var i = 0
-            while (i < all.length) {
-              val it = all(i)
-              if (!it.exhausted && it.doc < d) d = it.doc
-              i += 1
-            }
-            if (d == Long.MaxValue) continue = false
-            else {
-              val allowed = filter == null || filter.contains(d)
-              var score = 0.0
-              var matched = 0
-              var g = 0
-              while (g < members.length) {
-                var tfSum = 0
-                var dl = 0
-                val gm = members(g)
-                var m = 0
-                while (m < gm.length) {
-                  val it = gm(m)
-                  if (!it.exhausted && it.doc == d) { tfSum += it.tf; dl = it.docLen }
-                  m += 1
-                }
-                if (tfSum > 0) {
-                  matched += 1
-                  if (allowed) score += idfs(g) * graft.index.IndexBuilder.impact(tfSum, dl, avgDl)
-                }
-                g += 1
-              }
-              if (allowed && (if (isAnd) matched == members.length else matched >= msm))
-                top.offer(BlockMaxWand.Hit(d, score))
-              i = 0
-              while (i < all.length) {
-                val it = all(i)
-                if (!it.exhausted && it.doc == d) it.next()
-                i += 1
-              }
-            }
-          }
-          top.result.iterator.map(h => QueryHit(h.docId, h.score))
-        } finally {
-          predCursor match {
-            case c: AutoCloseable => c.close()
-            case _ =>
-          }
-        }
-      }
-    }
-      .toDF()
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
-  }
+  ): DataFrame =
+    Walks.synonymTopK(PostingSource(spark, indexDir), groups, mode, k, attrFilter, mustNot,
+      minShouldMatch)
 }

@@ -3,7 +3,6 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Analyzer
-import graft.index.IndexBuilder
 
 /** Highlighted snippets for top-k hits — the ES highlight phase (the
   * reference's event logs are READ through Kibana, which highlights the
@@ -40,12 +39,9 @@ object Snippets {
     require(window > 0, "window must be positive")
     val terms = queryTerms.distinct
     // idf per query term (absent → df 0 → still highlighted, weight ln(1+(n+0.5)/0.5))
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val dfs = IndexBuilder.readTerms(spark, indexDir)
-      .where($"term".isin(terms: _*))
-      .collect().map(t => t.term -> t.doc_freq).toMap
-    val weights: Map[String, Double] =
-      terms.map(t => t -> NaiveBm25.idf(stats.n_docs, dfs.getOrElse(t, 0L))).toMap
+    val src = PostingSource(spark, indexDir)
+    val dfs = src.dfOf(terms)
+    val weights: Map[String, Double] = terms.map(t => t -> src.idf(dfs.getOrElse(t, 0L))).toMap
     val bCtx = spark.sparkContext.broadcast((weights, window, pre, post))
 
     val snippets = Search.hydrate(spark, indexDir, hits, withText = true)

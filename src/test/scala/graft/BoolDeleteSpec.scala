@@ -220,13 +220,13 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
 
     // batched retrieval composes tombstones too (same walks, one job)
-    val batchGot = Search.batchTopK(spark, delDir.toString,
-      Seq((1L, Seq("w1", "w2"), "or"), (2L, Seq("w0"), "or")), 10)
+    val batchGot = new Searcher(spark, delDir.toString).topKBatch(
+      Seq(Searcher.BatchQuery(1L, Seq("w1", "w2"), "or"), Searcher.BatchQuery(2L, Seq("w0"), "or")), 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.sortBy(t => (-t._3, t._2)).map(_._2).toSeq).toMap
     assert(batchGot(1L) ==
       NaiveBm25.topKFiltered(corpus, Seq("w1", "w2"), "or", 10, id => !deleted(id)).map(_.docId),
-      "batchTopK sees tombstones")
+      "topKBatch sees tombstones")
     assert(batchGot(2L) ==
       NaiveBm25.topKFiltered(corpus, Seq("w0"), "or", 10, id => !deleted(id)).map(_.docId))
   }
@@ -379,12 +379,11 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(Search.wildcardTopK(spark, dir.toString, "zz*qq", 10)).isEmpty)
   }
 
-  test("multi-segment term-level rewrites: family ≡ single index (prefix/fuzzy/wildcard)") {
-    // global-df-capped expansion over the family must equal the merged
-    // index's expansion, so every rewrite query is rank-identical between
-    // a 2-segment family and the single full index (ids align: bases are
-    // url-rank cumulative)
-    val root = Files.createTempDirectory("graft-ms-rewrite").toString
+  /** The `dir` corpus split by url rank into a 2-segment family A|B
+    * (ids align with `dir`: bases are url-rank cumulative).
+    */
+  private def withFamily(name: String)(f: (String, String) => Unit): Unit = {
+    val root = Files.createTempDirectory(name).toString
     try {
       val byUrl = (0L until NDocs).map(PagesGen.pageFor(_)).sortBy(_.url)
       val aUrls = byUrl.take(NDocs.toInt / 2).map(_.url).toSet
@@ -393,7 +392,20 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"$root/A", segCfg)
       IndexBuilder.build(spark, PagesGen.pages(spark, NDocs, 8).filter(p => !aUrls(p.url)),
         s"$root/B", segCfg)
-      val ms = new graft.query.MultiSearcher(spark, Seq(s"$root/A", s"$root/B"))
+      f(s"$root/A", s"$root/B")
+    } finally {
+      import scala.reflect.io.Directory
+      new Directory(new java.io.File(root)).deleteRecursively()
+    }
+  }
+
+  test("multi-segment term-level rewrites: family ≡ single index (prefix/fuzzy/wildcard)") {
+    // global-df-capped expansion over the family must equal the merged
+    // index's expansion, so every rewrite query is rank-identical between
+    // a 2-segment family and the single full index; the other walk
+    // shapes (phrase, export, must_not, both filter contexts) too
+    withFamily("graft-ms-rewrite") { (segA, segB) =>
+      val ms = new graft.query.MultiSearcher(spark, Seq(segA, segB))
       assert(got(ms.prefixTopK("w123", 10)) == got(Search.prefixTopK(spark, dir.toString, "w123", 10)),
         "family prefix ≠ single-index prefix")
       assert(got(ms.fuzzyTopK("w1x", 10, maxEdits = 1)) == got(Search.fuzzyTopK(spark, dir.toString, "w1x", 10, maxEdits = 1)),
@@ -407,7 +419,7 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
         df.collect().map(r => (r.getString(0), r.getLong(1),
           math.round(r.getDouble(2) * 1e9))).toSeq
       assert(
-        gotC(Search.collapseTopKMulti(spark, Seq(s"$root/A", s"$root/B"),
+        gotC(Search.collapseTopKMulti(spark, Seq(segA, segB),
           Seq("w1", "w2"), "or", "lang", 10)) ==
           gotC(Search.collapseTopK(spark, dir.toString,
             Seq("w1", "w2"), "or", "lang", 10)),
@@ -416,14 +428,52 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
       def gotL(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(
-        gotL(graft.query.SortBy.topKByAttrMulti(spark, Seq(s"$root/A", s"$root/B"),
+        gotL(graft.query.SortBy.topKByAttrMulti(spark, Seq(segA, segB),
           Seq("w1", "w2"), "or", "warc_ts", 10)) ==
           gotL(graft.query.SortBy.topKByAttr(spark, dir.toString,
             Seq("w1", "w2"), "or", "warc_ts", 10)),
         "family sort ≠ single-index sort")
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(root)).deleteRecursively()
+      assert(got(ms.regexpTopK("w1[0-9]+", 10, prefixHint = "w1")) ==
+        got(Search.regexpTopK(spark, dir.toString, "w1[0-9]+", 10, prefixHint = "w1")),
+        "family regexp (prefix hint) ≠ single-index regexp")
+      assert(got(ms.phraseTopK(Seq("w1", "w2"), 10)) ==
+        got(Search.phraseTopK(spark, dir.toString, Seq("w1", "w2"), 10)),
+        "family phrase ≠ single-index phrase")
+      def sorted(df: org.apache.spark.sql.DataFrame) = got(df).sortBy(_._1)
+      assert(sorted(ms.exportMatches(Seq("w1", "w2"), "or")) ==
+        sorted(Search.exportMatches(spark, dir.toString, Seq("w1", "w2"), "or")),
+        "family export ≠ single-index export")
+      assert(got(ms.topK(Seq("w1", "w2"), "or", 10, mustNot = Seq("w3"))) ==
+        got(Search.topK(spark, dir.toString, Seq("w1", "w2"), "or", 10, mustNot = Seq("w3"))),
+        "family must_not ≠ single-index must_not")
+      val en = graft.index.AttrPred.lang("en")
+      assert(got(ms.topK(Seq("w1", "w2"), "or", 10, attrFilter = en)) ==
+        got(Search.topK(spark, dir.toString, Seq("w1", "w2"), "or", 10, attrFilter = en)),
+        "family attrFilter ≠ single-index attrFilter")
+      assert(got(ms.topK(Seq("w1", "w2"), "and", 10, docFilter = $"lang" === "en")) ==
+        got(Search.topK(spark, dir.toString, Seq("w1", "w2"), "and", 10, docFilter = $"lang" === "en")),
+        "family docFilter ≠ single-index docFilter")
+      // a single index IS the one-segment family: ids and scores bit for bit
+      assert(got(new graft.query.MultiSearcher(spark, Seq(dir.toString)).topK(Seq("w1", "w2"), "or", 10)) ==
+        got(Search.topK(spark, dir.toString, Seq("w1", "w2"), "or", 10)),
+        "one-segment family ≠ single index")
+    }
+  }
+
+  test("one MultiSearcher under 8 concurrent queries ≡ single-threaded answers") {
+    withFamily("graft-ms-concurrent") { (segA, segB) =>
+      val queries = (0 until 8).map(i => Seq(s"w${i + 1}", s"w${i + 9}", s"w1${i}0"))
+      val serial = queries.map(q => got(new MultiSearcher(spark, Seq(segA, segB)).topK(q, "or", 10)))
+      // one shared searcher, fresh memo: every thread misses the
+      // dictionary at once and must not serialize on (or corrupt) it
+      val shared = new MultiSearcher(spark, Seq(segA, segB))
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      try {
+        val futures = queries.map(q => pool.submit(() => got(shared.topK(q, "or", 10))))
+        futures.zip(serial).zipWithIndex.foreach { case ((f, exp), i) =>
+          assert(f.get() == exp, s"thread $i: ${queries(i)}")
+        }
+      } finally pool.shutdown()
     }
   }
 
@@ -934,7 +984,7 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == exp, s"percentiles: $got vs $exp")
   }
 
-  test("batchTopK: many queries, one job ≡ per-query naive top-k") {
+  test("topKBatch: many queries, one job ≡ per-query naive top-k") {
     val batch = Seq(
       (1L, Seq("w1", "w2"), "or"),
       (2L, Seq("w1", "w2"), "and"),
@@ -943,7 +993,8 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
       (5L, Seq("nosuchterm"), "or"),          // unmatched → absent
       (6L, Seq("w1", "nosuchterm"), "and")    // AND with missing term → absent
     )
-    val got = Search.batchTopK(spark, dir.toString, batch, 10)
+    val got = new Searcher(spark, dir.toString)
+      .topKBatch(batch.map { case (qid, ts, mode) => Searcher.BatchQuery(qid, ts, mode) }, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.sortBy(t => (-t._3, t._2)).toSeq).toMap
     batch.take(4).foreach { case (qid, ts, mode) =>

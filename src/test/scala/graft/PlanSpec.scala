@@ -154,9 +154,11 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("BroadcastHashJoin"), s"q_dict_join not broadcast:\n$plan")
   }
 
-  test("batchTopK: N queries share ONE postings scan and one shuffle") {
-    val df = graft.query.Search.batchTopK(spark, dir, Seq(
-      (1L, Seq("w1", "w2"), "or"), (2L, Seq("w2", "w3"), "and"), (3L, Seq("w0"), "or")), 5)
+  test("topKBatch: N queries share ONE postings scan and one shuffle") {
+    import graft.query.Searcher.BatchQuery
+    val df = new graft.query.Searcher(spark, dir).topKBatch(Seq(
+      BatchQuery(1L, Seq("w1", "w2"), "or"), BatchQuery(2L, Seq("w2", "w3"), "and"),
+      BatchQuery(3L, Seq("w0"), "or")), 5)
     val plan = executedPlan(df)
     val postingsScans = "Scan parquet".r.findAllIn(plan).size
     assert(postingsScans == 1, s"batch must scan postings once for all queries:\n$plan")
